@@ -34,11 +34,15 @@ DuckDB's ASOF JOIN):
   north star describes.
 
 Skew: a hot key (one doc_id = 30% of rows) would pin one task. Pass
-``hot_keys=[...]`` or ``auto_salt=True``: left rows of hot keys get
-``salt = xxhash64(left_ts) % n_salts``; right rows of hot keys are REPLICATED
-to every salt (each salted group then carries the full right-side timeline
-for that key, so the as-of result is unchanged — only the parallelism
-changes). Non-hot keys use salt=0 and are not replicated.
+``hot_keys=[...]`` (e.g. ``hot_keys=detect_hot_keys(left, key)``): left rows
+of hot keys salt by TIME-RANGE chunk of the key's [min, max] ts; each right
+row lands only in its own chunk, and each later chunk also receives ONE
+carried label — the latest right row strictly before the chunk boundary —
+so every salted group holds exactly the state its as-of lookups need. The
+as-of result is unchanged, only the parallelism changes, and replication is
+O(n_salts) rows per hot key (skew-aware repartitioning in the spirit of DS2,
+PAPERS.md). Non-hot keys use salt=0. Salting needs a single join key and
+TimestampType timestamps.
 """
 
 from __future__ import annotations
@@ -61,18 +65,16 @@ _TIE = "__asof_tie"
 _MATCH_TS = "__asof_match_ts"
 
 
-def detect_hot_keys(df: DataFrame, key: str, threshold: float = 0.05, sample_fraction: float | None = None) -> list:
+def detect_hot_keys(df: DataFrame, key: str, threshold: float = 0.05) -> list:
     """Keys owning more than ``threshold`` of rows — ONE plan-build job.
 
-    NOTE: ``asof_join(auto_salt=True)`` pays this job before the main job
-    starts, and it executes ``df``'s upstream plan once (the total rides the
-    grouped counts via a reused exchange — no second scan). For repeated or
-    derived inputs it is still cheaper to detect once on the rawest
-    equivalent frame and pass ``hot_keys=`` explicitly, as the flagship does
-    with its single plan-build collect.
+    NOTE: the job executes ``df``'s upstream plan once at plan-build time
+    (the total rides the grouped counts via a reused exchange — no second
+    scan). For repeated or derived inputs it is cheaper to detect once on the
+    rawest equivalent frame and pass the result as ``asof_join(hot_keys=)``,
+    as the flagship does with its single plan-build collect.
     """
-    src = df.sample(sample_fraction) if sample_fraction else df
-    counts = src.groupBy(key).agg(F.count(F.lit(1)).alias("__c"))
+    counts = df.groupBy(key).agg(F.count(F.lit(1)).alias("__c"))
     # ONE job: the total is an aggregate OVER the grouped counts, joined back
     # as a broadcast scalar — Catalyst reuses the counts exchange
     # (ReusedExchange, pinned by test_plan_audit), so the upstream plan is
@@ -103,7 +105,7 @@ def _range_chunk_expr(ts_col, hot_bounds_us: dict, n_salts: int):
         )
         cond = F.col("__rk") == F.lit(key)
         expr = F.when(cond, branch) if expr is None else expr.when(cond, branch)
-    return F.coalesce(expr, F.lit(0))
+    return F.lit(0) if expr is None else F.coalesce(expr, F.lit(0))
 
 
 def asof_join(
@@ -117,10 +119,7 @@ def asof_join(
     tolerance_us: int | None = None,
     strategy: str = "window",
     hot_keys: Sequence | None = None,
-    auto_salt: bool = False,
     n_salts: int = 16,
-    num_partitions: int | None = None,
-    hot_salt_mode: str = "hash",
     hot_bounds_us: dict | None = None,
 ) -> DataFrame:
     """Left as-of join: left columns + ``payload`` columns from right.
@@ -128,24 +127,15 @@ def asof_join(
     Payload columns are null where no right row with ``right_ts <= left_ts``
     (within tolerance) exists for the key.
 
-    ``hot_salt_mode`` picks how hot keys are parallelized:
-
-    * ``"hash"`` — left rows salt by xxhash64(ts) % n_salts; the hot key's
-      ENTIRE label timeline replicates to every salt. Simple, works for any
-      orderable ts, but pushes O(hot_labels x n_salts) rows into the sort.
-    * ``"range"`` — the sort-merge shape from the north star: left rows salt
-      by TIME-RANGE chunk of [min, max] (bounds from one tiny agg over the
-      hot left rows — or passed in via ``hot_bounds_us``, a
-      ``{key: (min_us, max_us)}`` dict computed on the CHEAPEST equivalent
-      frame, e.g. the raw scan: collecting bounds from a derived ``left``
-      re-executes the whole upstream plan at plan-build time, and chunk
-      balance — never correctness — is all the bounds affect); labels land
-      only in their own chunk, plus ONE carried
-      label per later chunk boundary — the latest label strictly before the
-      boundary, found by a recursive (tiny, unchunked) as-of lookup — so each
-      chunk carries exactly the state it needs. Replication is O(n_salts)
-      rows per hot key instead of O(labels x n_salts). Requires TimestampType
-      ts and a single join key.
+    ``hot_keys`` are range-salted into ``n_salts`` time chunks (module
+    docstring). The per-key chunk bounds come from one tiny agg over the hot
+    left rows — or pass ``hot_bounds_us``, a ``{key: (min_us, max_us)}``
+    dict computed on the CHEAPEST equivalent frame, e.g. the raw scan:
+    collecting bounds from a derived ``left`` re-executes the whole upstream
+    plan at plan-build time, and chunk balance — never correctness — is all
+    the bounds affect. Hot keys need a single join key and TimestampType
+    ``left_ts``/``right_ts``; anything else raises ``ValueError`` while the
+    plan is built.
     """
     keys = [on] if isinstance(on, str) else list(on)
     # parquet naive timestamps arrive as TIMESTAMP_NTZ under a default Spark 4
@@ -155,9 +145,6 @@ def asof_join(
     # a right row with NULL ts can never satisfy right_ts <= left_ts (SQL
     # comparison semantics; DuckDB ASOF agrees) — drop before the merge
     right = right.filter(F.col(right_ts).isNotNull())
-    spark = left.sparkSession
-    if auto_salt and hot_keys is None:
-        hot_keys = detect_hot_keys(left, keys[0])
     hot_keys = list(hot_keys or [])
 
     left_cols = left.columns
@@ -165,14 +152,15 @@ def asof_join(
         if c in left_cols:
             raise ValueError(f"payload column {c!r} collides with a left column")
 
-    carry_rhs = None
     # ---- salt assignment ----------------------------------------------------
-    if hot_keys and hot_salt_mode == "range":
+    l_salt = r_salt = F.lit(0)
+    carry_rhs = None
+    if hot_keys:
         if len(keys) != 1:
-            raise ValueError("hot_salt_mode='range' supports a single join key")
-        if not dict(left.dtypes)[left_ts].startswith("timestamp"):
-            raise ValueError("hot_salt_mode='range' requires TimestampType timestamps")
-        hot = F.col(keys[0]).isin(list(hot_keys))
+            raise ValueError("asof_join hot_keys salting supports a single join key")
+        if not all(dict(df.dtypes)[c].startswith("timestamp") for df, c in ((left, left_ts), (right, right_ts))):
+            raise ValueError("asof_join hot_keys salting requires TimestampType timestamps")
+        hot = F.col(keys[0]).isin(hot_keys)
         if hot_bounds_us is None:
             b = (
                 left.filter(hot)
@@ -201,23 +189,15 @@ def asof_join(
             hot,
             _range_chunk_expr(F.col(left_ts), hot_bounds_us, n_salts),
         ).otherwise(F.lit(0))
-        r_salt_single = F.when(
+        r_salt = F.when(
             hot, _range_chunk_expr(F.col(right_ts), hot_bounds_us, n_salts)
         ).otherwise(F.lit(0))
         # chunk-expr CASE keys off __rk; expose it on both sides
         left = left.withColumn("__rk", F.col(keys[0]))
         right = right.withColumn("__rk", F.col(keys[0]))
         carry_rhs = _boundary_carries(
-            spark, right, keys[0], right_ts, list(payload), tie_break, hot_bounds_us, n_salts
+            right, keys[0], right_ts, list(payload), tie_break, hot_bounds_us, n_salts
         )
-        r_salts = None
-    elif hot_keys:
-        hot = F.col(keys[0]).isin([k for k in hot_keys])
-        l_salt = F.when(hot, F.pmod(F.xxhash64(F.col(left_ts)), F.lit(n_salts)).cast("int")).otherwise(F.lit(0))
-        r_salts = F.when(hot, F.sequence(F.lit(0), F.lit(n_salts - 1))).otherwise(F.array(F.lit(0)))
-    else:
-        l_salt = F.lit(0)
-        r_salts = F.array(F.lit(0))
 
     tie_l = F.lit(0).cast("long")  # left rows sort AFTER right rows at equal ts via _SIDE
     tie_r = F.col(tie_break).cast("long") if tie_break else F.lit(0).cast("long")
@@ -227,18 +207,15 @@ def asof_join(
         lhs = lhs.withColumn(c, F.lit(None).cast(dict(right.dtypes)[c]))
     lhs = lhs.withColumn(_MATCH_TS, F.lit(None).cast(dict(right.dtypes)[right_ts]))
 
-    rhs = right.select(keys + [right_ts] + list(payload) + ([tie_break] if tie_break else []) + (["__rk"] if carry_rhs is not None else []))
-    if carry_rhs is not None:
-        rhs = rhs.withColumn(_SALT, r_salt_single)
-    else:
-        rhs = rhs.withColumn(_SALT, F.explode(r_salts))
+    rhs = right.select(keys + [right_ts] + list(payload) + ([tie_break] if tie_break else []) + (["__rk"] if hot_keys else []))
     rhs = (
-        rhs.withColumn(_SIDE, F.lit(0))
+        rhs.withColumn(_SALT, r_salt)
+        .withColumn(_SIDE, F.lit(0))
         .withColumn(_TS, F.col(right_ts))
         .withColumn(_TIE, tie_r)
         .withColumn(_MATCH_TS, F.col(right_ts))
     )
-    left_cols_all = left.columns  # includes __rk in range mode
+    left_cols_all = left.columns  # includes __rk when salted
     for c in left_cols_all:
         if c not in rhs.columns:
             rhs = rhs.withColumn(c, F.lit(None).cast(dict(left.dtypes)[c]))
@@ -251,7 +228,6 @@ def asof_join(
                     c, F.lit(None).cast(dict(merged.dtypes)[c])
                 )
         merged = merged.unionByName(carry_rhs.select(union_cols))
-        left_cols = [c for c in left_cols if c != "__rk"]
 
     if strategy == "window":
         w = (
@@ -274,7 +250,7 @@ def asof_join(
             out = out.withColumn(c, F.col("__asof_pack").getField(c))
         out = out.drop("__asof_pack")
     elif strategy == "merge":
-        out = _merge_kernel(merged, keys, payload, num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions")))
+        out = _merge_kernel(merged, keys, payload)
     else:
         raise ValueError(f"unknown strategy {strategy!r}")
 
@@ -288,7 +264,6 @@ def asof_join(
 
 
 def _boundary_carries(
-    spark,
     right: DataFrame,
     key: str,
     right_ts: str,
@@ -299,7 +274,7 @@ def _boundary_carries(
 ) -> DataFrame | None:
     """One carried label per (hot key, later chunk): the latest right row
     STRICTLY before the chunk boundary. O(n_salts) carry rows per hot key —
-    vs O(labels x n_salts) under hash salting.
+    vs O(labels x n_salts) when every label replicates to every salt.
 
     Shape matters for plan DEPTH, not just row counts: an earlier version
     found the carries with a recursive as-of lookup (union + sort + window —
@@ -319,7 +294,7 @@ def _boundary_carries(
     if not brows:
         return None
     key_type = dict(right.dtypes)[key]
-    bdf = spark.createDataFrame(brows, schema=f"`{key}` {key_type}, __carry_salt int, __bus long")
+    bdf = right.sparkSession.createDataFrame(brows, schema=f"`{key}` {key_type}, __carry_salt int, __bus long")
     rhot = (
         right.filter(F.col(key).isin(list(hot_bounds_us)))
         .withColumn("__rus", F.unix_micros(F.col(right_ts)))
@@ -349,11 +324,13 @@ def _boundary_carries(
     )
 
 
-def _merge_kernel(merged: DataFrame, keys: list[str], payload: Sequence[str], num_partitions: int) -> DataFrame:
-    """Explicit sorted-merge kernel: co-partition, sort, grouped ffill per Arrow batch."""
+def _merge_kernel(merged: DataFrame, keys: list[str], payload: Sequence[str]) -> DataFrame:
+    """Explicit sorted-merge kernel: co-partition (into
+    ``spark.sql.shuffle.partitions``), sort, grouped ffill per Arrow batch."""
     fill_cols = list(payload) + [_MATCH_TS]
     grp_cols = keys + [_SALT]
-    part = merged.repartition(num_partitions, *grp_cols).sortWithinPartitions(
+    n_parts = int(merged.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    part = merged.repartition(n_parts, *grp_cols).sortWithinPartitions(
         *grp_cols, F.col(_TS).asc(), F.col(_SIDE).asc(), F.col(_TIE).asc()
     )
     schema = part.schema
@@ -425,13 +402,13 @@ def asof_join_forward(
 
     Implemented by time reflection: both sides map ts -> PIVOT - ts and run
     through the backward kernel — every backward property (strategies,
-    tolerance, hash salting, null handling, struct-packed payload) carries
+    tolerance, hot-key salting, null handling, struct-packed payload) carries
     over unchanged, because reflection is an order-reversing isometry of the
     time line. ``matched_ts`` is reflected back to the original instant.
     Ties at identical right_ts resolve by MAX ``tie_break`` (same rule as
-    backward). Range-mode hot salting (`hot_salt_mode='range'`) is not
-    exposed here — its per-key bounds are stated in original time; hash
-    salting covers the skew case.
+    backward). ``hot_keys`` are range-salted on the REFLECTED timestamps,
+    with bounds from the backward kernel's own agg over the reflected left
+    rows (``hot_bounds_us`` is stated in original time, so it is not taken).
     """
     left = ntz_to_ts(left, left_ts)
     right = ntz_to_ts(right, right_ts)

@@ -44,6 +44,16 @@ def ntz_to_ts(df: DataFrame, ts: str) -> DataFrame:
     return df
 
 
+def _check_order_col(df: DataFrame, order_col: str | None) -> None:
+    """A shared order key must hold unix_micros(ts): anything but a bigint
+    column would order (and range-frame) on the wrong domain silently."""
+    if order_col is None:
+        return
+    got = dict(df.dtypes).get(order_col, "no such column")
+    if got != "bigint":
+        raise ValueError(f"order_col {order_col!r} must be a bigint column holding unix_micros(ts), got {got!r}")
+
+
 def explode_tokens(df: DataFrame, tokens_col: str = "tokens", keep: list[str] | None = None) -> DataFrame:
     """Per-token exploded view: one row per (doc, pos). Narrow — no shuffle.
 
@@ -148,6 +158,7 @@ def sessionize(
     #entities * n_chunks.
     """
     df = ntz_to_ts(df, ts)
+    _check_order_col(df, order_col)
     tdouble = F.col(ts).cast("double")
     # order by integer micros (same ordering as the raw timestamp) so a
     # downstream rolling_count window — whose RANGE frames must sort by
@@ -535,6 +546,7 @@ def rolling_count(
     pointer monotonically (O(n)), unlike sliding frames which rescan.
     """
     df = ntz_to_ts(df, ts)
+    _check_order_col(df, order_col)
     if strategy == "range":
         w = (
             Window.partitionBy(entity)

@@ -1,21 +1,1 @@
-from marmot_spark.plans.pipeline import (
-    AsofBackfillOp,
-    BinarizeOp,
-    ContextWindowOp,
-    FeatureOp,
-    NgramMembershipOp,
-    RollingCountOp,
-    SessionizeOp,
-    compile_pipeline,
-)
-
-__all__ = [
-    "FeatureOp",
-    "ContextWindowOp",
-    "NgramMembershipOp",
-    "AsofBackfillOp",
-    "SessionizeOp",
-    "RollingCountOp",
-    "BinarizeOp",
-    "compile_pipeline",
-]
+"""Pipelines composed from plain operator calls; ``flagship.py`` is the worked example."""

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from marmot_spark.operators.asof import asof_join
 from marmot_spark.operators.windows import (
     explode_with_context,
+    ntz_to_ts,
     rolling_count,
     sessionize,
     with_time_chunk,
@@ -83,6 +84,9 @@ def flagship_features(
     frame: keys + ts + session_id + rolling_docs + payload + context lags/
     leads + ``extra_keep``.
     """
+    # NTZ ts (naive parquet under a default Spark 4 session) breaks the
+    # unix_micros order key on the serial branch; a no-op for TIMESTAMP input
+    wide = ntz_to_ts(wide, ts_col)
     keys = list(keys)
     order_extra = list(order_extra) if order_extra is not None else [keys[0]]
     narrow = wide.select(*keys, ts_col)
@@ -167,7 +171,6 @@ def flagship_features(
         base, labels, on=asof_on, left_ts=ts_col, right_ts=right_ts,
         payload=list(payload), tie_break=tie_break,
         hot_keys=hot_keys or None, n_salts=n_salts,
-        hot_salt_mode="range" if hot_keys else "hash",
         hot_bounds_us=hot_bounds_us,
     )
     feat_cols = ["session_id", "rolling_docs", *payload]

@@ -3,13 +3,15 @@ zero temporal leakage, tie-breaks, tolerance, salting invariance."""
 
 from __future__ import annotations
 
+import contextlib
+
 import duckdb
 import pandas as pd
 import pytest
 from datetime import datetime
 from pyspark.sql import functions as F
 
-from marmot_spark.operators.asof import asof_join, detect_hot_keys
+from marmot_spark.operators.asof import asof_join, asof_join_forward, asof_join_nearest, detect_hot_keys
 
 
 def _load(spark, fixture_dir):
@@ -195,33 +197,32 @@ def test_orphan_keys_get_null(spark, fixture_dir):
 
 def test_range_salting_equals_unsalted(spark, fixture_dir):
     """Time-range salting with boundary carries must be exactly the unsalted
-    result, for both strategies and with tolerance."""
+    result, for both strategies and with tolerance — backward, and forward
+    and nearest, which salt on reflected timestamps."""
     seqs, labels = _load(spark, fixture_dir)
     hot = ["d00000000", "d00000001"]
     sel = ["doc_id", "seq_ts", "n_tok", "tag", "score", "matched_ts"]
+    kw = dict(on="doc_id", left_ts="seq_ts", right_ts="label_ts",
+              payload=["tag", "score"], tie_break="label_seq")
 
-    base = asof_join(seqs, labels, on="doc_id", left_ts="seq_ts", right_ts="label_ts",
-                     payload=["tag", "score"], tie_break="label_seq")
-    for strategy in ["window", "merge"]:
-        got = asof_join(seqs, labels, on="doc_id", left_ts="seq_ts", right_ts="label_ts",
-                        payload=["tag", "score"], tie_break="label_seq",
-                        hot_keys=hot, n_salts=8, hot_salt_mode="range", strategy=strategy)
-        assert got.count() == seqs.count()
-        assert got.select(sel).exceptAll(base.select(sel)).count() == 0, strategy
-        assert base.select(sel).exceptAll(got.select(sel)).count() == 0, strategy
+    for join in (asof_join, asof_join_forward, asof_join_nearest):
+        base = join(seqs, labels, **kw)
+        for strategy in ["window", "merge"]:
+            got = join(seqs, labels, **kw, hot_keys=hot, n_salts=8, strategy=strategy)
+            assert got.count() == seqs.count()
+            assert got.select(sel).exceptAll(base.select(sel)).count() == 0, (join.__name__, strategy)
+            assert base.select(sel).exceptAll(got.select(sel)).count() == 0, (join.__name__, strategy)
 
-    t_base = asof_join(seqs, labels, on="doc_id", left_ts="seq_ts", right_ts="label_ts",
-                       payload=["tag", "score"], tie_break="label_seq", tolerance_us=600_000_000)
-    t_rng = asof_join(seqs, labels, on="doc_id", left_ts="seq_ts", right_ts="label_ts",
-                      payload=["tag", "score"], tie_break="label_seq", tolerance_us=600_000_000,
-                      hot_keys=hot, n_salts=8, hot_salt_mode="range")
-    assert t_rng.select(sel).exceptAll(t_base.select(sel)).count() == 0
+        t_base = join(seqs, labels, **kw, tolerance_us=600_000_000)
+        t_rng = join(seqs, labels, **kw, tolerance_us=600_000_000, hot_keys=hot, n_salts=8)
+        assert t_rng.select(sel).exceptAll(t_base.select(sel)).count() == 0, join.__name__
 
 
 def test_range_salting_external_bounds(spark, fixture_dir):
     """Precomputed hot_bounds_us (from a cheap scan, not the derived left plan)
     must give the exact unsalted result — even with deliberately LOOSE bounds,
-    since bounds affect chunk balance, never correctness."""
+    or none at all (every hot key falls back to one chunk, with a warning),
+    or a single salt — since bounds affect chunk balance, never correctness."""
     seqs, labels = _load(spark, fixture_dir)
     hot = ["d00000000", "d00000001"]
     sel = ["doc_id", "seq_ts", "n_tok", "tag", "score", "matched_ts"]
@@ -235,10 +236,12 @@ def test_range_salting_external_bounds(spark, fixture_dir):
     )
     exact = {r["doc_id"]: (r["mn"], r["mx"]) for r in rows}
     loose = {k: (mn - 86_400_000_000, mx + 86_400_000_000) for k, (mn, mx) in exact.items()}
-    for hb in (exact, loose):
-        got = asof_join(seqs, labels, on="doc_id", left_ts="seq_ts", right_ts="label_ts",
-                        payload=["tag", "score"], tie_break="label_seq",
-                        hot_keys=hot, n_salts=8, hot_salt_mode="range", hot_bounds_us=hb)
+    for hb, n_salts in ((exact, 8), (loose, 8), ({}, 8), (exact, 1)):
+        warns = pytest.warns(UserWarning, match="not be range-salted") if not hb else contextlib.nullcontext()
+        with warns:
+            got = asof_join(seqs, labels, on="doc_id", left_ts="seq_ts", right_ts="label_ts",
+                            payload=["tag", "score"], tie_break="label_seq",
+                            hot_keys=hot, n_salts=n_salts, hot_bounds_us=hb)
         assert got.count() == seqs.count()
         assert got.select(sel).exceptAll(base.select(sel)).count() == 0
         assert base.select(sel).exceptAll(got.select(sel)).count() == 0
@@ -248,16 +251,18 @@ def test_range_salting_guards(spark, fixture_dir):
     seqs, labels = _load(spark, fixture_dir)
     with pytest.raises(ValueError, match="single join key"):
         asof_join(seqs, labels, on=["doc_id", "source"], left_ts="seq_ts", right_ts="label_ts",
-                  payload=["score"], hot_keys=["d00000000"], hot_salt_mode="range")
+                  payload=["score"], hot_keys=["d00000000"])
+    # range chunks are micros of a TimestampType ts; a bigint ts is refused
+    with pytest.raises(ValueError, match="TimestampType"):
+        asof_join(seqs.withColumn("seq_ts", F.unix_micros("seq_ts")),
+                  labels.withColumn("label_ts", F.unix_micros("label_ts")),
+                  on="doc_id", left_ts="seq_ts", right_ts="label_ts",
+                  payload=["score"], hot_keys=["d00000000"])
 
 
 def test_asof_forward_matches_pandas(spark, fixture_dir):
     """asof_join_forward == pandas merge_asof(direction='forward') on the
     seeded fixtures, for both strategies and with a tolerance."""
-    import pandas as pd
-
-    from marmot_spark.operators.asof import asof_join_forward
-
     seqs = spark.read.parquet(f"{fixture_dir}/sequences.parquet").select(
         "doc_id", "seq_ts"
     )
@@ -304,9 +309,6 @@ def test_asof_nearest_matches_pandas_composition(spark, fixture_dir):
     under the documented tie rule (dist_b <= dist_f -> backward) — an
     independent construction of the same semantics on the seeded fixtures."""
     import numpy as np
-    import pandas as pd
-
-    from marmot_spark.operators.asof import asof_join_nearest
 
     seqs = spark.read.parquet(f"{fixture_dir}/sequences.parquet").select("doc_id", "seq_ts")
     labels = spark.read.parquet(f"{fixture_dir}/labels.parquet").select(
@@ -345,8 +347,6 @@ def test_asof_nearest_matches_pandas_composition(spark, fixture_dir):
 def test_asof_nearest_tie_prefers_backward(spark):
     """Equal distance on both sides -> the BACKWARD (earlier, leakage-safe)
     match wins; an exact-ts right row wins over any other candidate."""
-    from marmot_spark.operators.asof import asof_join_nearest
-
     left = spark.createDataFrame(
         [("k", "2024-01-01 00:00:10"), ("k", "2024-01-01 00:01:00")],
         "id string, ts string",

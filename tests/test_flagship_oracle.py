@@ -61,11 +61,7 @@ FROM a, UNNEST(range(length(tokens))) AS u(p)
 """
 
 
-def test_flagship_pipeline_matches_duckdb_mirror(spark, fixture_dir):
-    import bench
-
-    out = bench.flagship_pipeline(spark, fixture_dir).toPandas()
-
+def _assert_matches_mirror(out: pd.DataFrame, fixture_dir) -> None:
     con = duckdb.connect()
     con.execute(f"CREATE VIEW sequences AS FROM '{fixture_dir}/sequences.parquet'")
     con.execute(f"CREATE VIEW labels AS FROM '{fixture_dir}/labels.parquet'")
@@ -87,3 +83,29 @@ def test_flagship_pipeline_matches_duckdb_mirror(spark, fixture_dir):
             assert a[c].fillna(-9).astype("int64").equals(b[c].fillna(-9).astype("int64")), c
         else:
             assert a[c].astype("int64").equals(b[c].astype("int64")), c
+
+
+def test_flagship_pipeline_matches_duckdb_mirror(spark, fixture_dir):
+    import bench
+
+    _assert_matches_mirror(bench.flagship_pipeline(spark, fixture_dir).toPandas(), fixture_dir)
+
+
+def test_flagship_serial_branch_accepts_ntz_ts(spark, fixture_dir, monkeypatch):
+    """A TIMESTAMP_NTZ ts_col (how a default Spark 4 session reads naive
+    parquet) on the serial branch — n_chunks=1, no hot keys — still gives the
+    mirror's features: the ts is normalized before the unix_micros order key."""
+    import bench
+    from pyspark.sql import functions as F
+
+    from marmot_spark.plans import flagship
+
+    real = flagship.flagship_features
+
+    def serial_ntz(wide, labels, **kw):
+        ts = kw["ts_col"]
+        wide = wide.withColumn(ts, F.col(ts).cast("timestamp_ntz"))
+        return real(wide, labels, **{**kw, "n_chunks": 1, "hot_keys": None})
+
+    monkeypatch.setattr(flagship, "flagship_features", serial_ntz)
+    _assert_matches_mirror(bench.flagship_pipeline(spark, fixture_dir).toPandas(), fixture_dir)

@@ -642,38 +642,6 @@ def test_streaming_stateful_totals_multibatch_drain(spark, sf_dir, tmp_path):
     assert got == want
 
 
-def test_pipeline_compiler_equals_direct_ops(spark, fixture_dir):
-    """compile_pipeline must produce the same frame as composing ops by hand
-    (it is the §2.10 extension surface — pure metadata folded into one plan)."""
-    from marmot_spark.operators.windows import explode_tokens, with_context_window
-    from marmot_spark.plans.pipeline import (
-        ContextWindowOp,
-        RollingCountOp,
-        SessionizeOp,
-        compile_pipeline,
-    )
-
-    seqs = spark.read.parquet(f"{fixture_dir}/sequences.parquet").select(
-        "doc_id", "seq_ts", "tokens", "source"
-    )
-    ex = explode_tokens(seqs)
-    ops = [
-        ContextWindowOp(k=1),
-        SessionizeOp(entity="source", ts="seq_ts", gap_seconds=60.0, order_extra=("doc_id", "pos")),
-        RollingCountOp(entity="source", ts="seq_ts", window_seconds=3600, out_col="rn"),
-    ]
-    got = compile_pipeline(ex, ops)
-    want = with_context_window(ex, k=1)
-    from marmot_spark.operators.windows import rolling_count, sessionize
-
-    want = sessionize(want, "source", "seq_ts", 60.0, order_extra=["doc_id", "pos"])
-    want = rolling_count(want, "source", "seq_ts", 3600, "rn")
-    sel = ["doc_id", "pos", "tok", "lag_1", "lead_1", "session_id", "rn"]
-    assert sorted(got.columns) == sorted(want.columns)
-    assert got.select(sel).exceptAll(want.select(sel)).count() == 0
-    assert want.select(sel).exceptAll(got.select(sel)).count() == 0
-
-
 def test_simhash_hamming_banding_complete(spark, sf_dir):
     """Pigeonhole banding must find EXACTLY the naive quadratic pair set."""
     from marmot_spark.operators.dedup import simhash_col, simhash_hamming_pairs

@@ -226,3 +226,24 @@ def test_shared_chunk_col_matches_serial(spark, fixture_dir):
     sel = ["doc_id", "seq_ts", "n_tok", "source", "rn", "session_id"]
     assert a.select(sel).exceptAll(b.select(sel)).count() == 0
     assert b.select(sel).exceptAll(a.select(sel)).count() == 0
+
+
+def test_order_col_must_be_bigint_micros(spark, fixture_dir):
+    """A shared order key that is not a bigint unix_micros(ts) column — here
+    seconds as double, or a missing column — fails while the plan is built,
+    for both window operators that take one."""
+    import pytest
+
+    from marmot_spark.operators.windows import rolling_count
+
+    seqs = spark.read.parquet(f"{fixture_dir}/sequences.parquet").select("doc_id", "seq_ts", "source")
+    secs = seqs.withColumn("__ous", F.col("seq_ts").cast("double"))
+    ops = (
+        lambda df: sessionize(df, "source", "seq_ts", 60.0, order_col="__ous"),
+        lambda df: rolling_count(df, "source", "seq_ts", 3600, "rn", order_col="__ous"),
+    )
+    for op in ops:
+        for bad in (secs, seqs):
+            with pytest.raises(ValueError, match="order_col"):
+                op(bad)
+        op(seqs.withColumn("__ous", F.unix_micros("seq_ts")))

@@ -394,6 +394,7 @@ def test_narrow_chain_fused_rolling_and_shared_sort(spark):
     # visible Sort orders by __ous at all.
     # AQE must be off BEFORE the checkpoint call: LogicalRDD snapshots the
     # physical plan's partitioning/ordering at localCheckpoint() time
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         ck = sess.localCheckpoint(eager=False)
@@ -403,7 +404,7 @@ def test_narrow_chain_fused_rolling_and_shared_sort(spark):
         )
         plan_ck = plan_of(roll_ck, "simple")
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert "Scan ExistingRDD" in plan_ck  # the checkpoint boundary is there
     for ln in plan_ck.splitlines():
         if "Sort [" in ln:
