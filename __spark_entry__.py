@@ -25,10 +25,6 @@ from marmot_spark.functions.text import (
     FP_MULT,
     LANG_MARKERS,
     STOPWORDS,
-    doc_fingerprint_col,
-    lang_id_col,
-    quality_cols,
-    token_count_cols,
 )
 from marmot_spark.operators.alignment import (
     join_alignments,
@@ -51,6 +47,7 @@ from marmot_spark.operators.similarity import (
     lsh_topk,
 )
 from marmot_spark.operators.windows import (
+    entity_time_bounds,
     explode_tokens,
     explode_with_context,
     rolling_count,
@@ -312,11 +309,6 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id),
 """
 
 
-def _q_w6_sessionize(spark, sf):
-    ev = sessionize(_events(spark, sf), "user_id", "ts", 1800.0, order_extra=["event_id"])
-    return ev.select("event_id", "user_id", F.unix_micros("ts").alias("ts_us"), "session_id")
-
-
 _SQL_W6 = """
 SELECT event_id, user_id, epoch_us(ts) AS ts_us,
   CAST(sum(CASE WHEN gap_us IS NULL OR gap_us > 1800*1000000 THEN 1 ELSE 0 END)
@@ -526,8 +518,12 @@ def _q_a4_rolling_chunked(spark, sf):
     per-entity time-range chunks, in-chunk frames + chunk-tail sideband.
     The driver gate pins chunked == SQL."""
     ev = _events(spark, sf).withColumn("value_c", _cents("value"))
-    ev = rolling_count(ev, "event_type", "ts", 3600, "rolling_n", n_chunks=4)
-    ev = rolling_count(ev, "event_type", "ts", 3600, "rolling_value_c", value_col="value_c", n_chunks=4)
+    # one plan-time bounds collect shared by both passes
+    bounds = entity_time_bounds(ev, "event_type", "ts")
+    ev = rolling_count(ev, "event_type", "ts", 3600, "rolling_n", n_chunks=4, bounds=bounds)
+    ev = rolling_count(
+        ev, "event_type", "ts", 3600, "rolling_value_c", value_col="value_c", n_chunks=4, bounds=bounds
+    )
     return ev.select("event_id", "event_type", F.unix_micros("ts").alias("ts_us"), "rolling_n", "rolling_value_c")
 
 
@@ -1591,12 +1587,6 @@ SELECT id_a, id_b, jaccard_ppm FROM (
 """
 
 
-def _q_text_quality(spark, sf):
-    d = _tbl(spark, sf, "documents")
-    cols = quality_cols("text")
-    return d.select("doc_id", *[c.alias(k) for k, c in cols.items()])
-
-
 _SQL_QUALITY = f"""
 SELECT doc_id,
   CAST(length(text) AS INT) AS n_chars_obs,
@@ -1608,11 +1598,6 @@ SELECT doc_id,
        * 1000000 / greatest(length(text), 1)) AS BIGINT) AS punct_ratio_ppm
 FROM documents
 """
-
-
-def _q_text_lang_id(spark, sf):
-    d = _tbl(spark, sf, "documents")
-    return d.select("doc_id", "lang", lang_id_col("text").alias("pred_lang"))
 
 
 def _sql_lang_id() -> str:
@@ -1628,12 +1613,6 @@ FROM documents
 """
 
 
-def _q_text_token_counts(spark, sf):
-    d = _tbl(spark, sf, "documents")
-    cols = token_count_cols("text")
-    return d.select("doc_id", *[c.alias(k) for k, c in cols.items()])
-
-
 _SQL_TOKEN_COUNTS = """
 SELECT doc_id,
   CAST(len(string_split(text, ' ')) AS INT) AS n_tok_ws,
@@ -1641,11 +1620,6 @@ SELECT doc_id,
   CAST(len(regexp_extract_all(text, '[0-9]+')) AS INT) AS n_num_runs
 FROM documents
 """
-
-
-def _q_doc_fingerprint(spark, sf):
-    d = _docs(spark, sf)
-    return d.select("doc_id", doc_fingerprint_col("tokens").alias("fingerprint"))
 
 
 _SQL_FINGERPRINT = f"""
@@ -2406,16 +2380,6 @@ FROM o, UNNEST(range(off//128, (off+n-1)//128 + 1)) AS p(x)
 """
 
 
-def _q_text_repetition(spark, sf):
-    """Gopher-style repetition filter signals: duplicate word-2gram/3gram
-    fractions per doc (ppm). Pure Column exprs, codegen-fused."""
-    from marmot_spark.functions.text import repetition_cols
-
-    d = _tbl(spark, sf, "documents")
-    cols = repetition_cols("text")
-    return d.select("doc_id", *[c.alias(k) for k, c in cols.items()])
-
-
 def _rep_sql(k: int) -> str:
     g = (
         f"list_transform(range(length(string_split(text,' ')) - {k - 1}), i -> "
@@ -2473,35 +2437,6 @@ SELECT te.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
 FROM te LEFT JOIN tr ON te.sh = tr.shh
 GROUP BY te.doc_id
 """
-
-
-def _q_quality_filter(spark, sf):
-    """Composite C4/Gopher-style keep/drop decision per document with
-    per-rule reason flags (too_short, high_punct, low_stopword,
-    high_repetition) — the realistic pre-training filter: one narrow
-    codegen-fused projection composing quality_cols + repetition_cols, no
-    shuffle, pushes to the scan at any scale."""
-    from marmot_spark.functions.text import quality_cols, repetition_cols
-
-    d = _tbl(spark, sf, "documents")
-    q = quality_cols("text")
-    r = repetition_cols("text")
-    n_tok = F.size(F.split("text", " "))
-    too_short = (n_tok < 5).cast("int")
-    high_punct = (q["punct_ratio_ppm"] > 100_000).cast("int")
-    low_stop = (q["stop_ratio_ppm"] < 10_000).cast("int")
-    high_rep = (r["dup_3gram_ppm"] > 100_000).cast("int")
-    keep = (
-        (too_short == 0) & (high_punct == 0) & (low_stop == 0) & (high_rep == 0)
-    ).cast("int")
-    return d.select(
-        "doc_id",
-        too_short.alias("f_too_short"),
-        high_punct.alias("f_high_punct"),
-        low_stop.alias("f_low_stopword"),
-        high_rep.alias("f_high_repetition"),
-        keep.alias("keep"),
-    )
 
 
 def _sql_quality_filter() -> str:

@@ -61,17 +61,6 @@ def shingle_hashes_col(tokens_col: str, k: int = 3) -> Column:
     ).otherwise(F.array().cast("array<long>"))
 
 
-def minhash_signature_cols(shingles_col_name: str, n_hashes: int = 8) -> list[Column]:
-    """minhash_k = min over shingles of hash_k(shingle); P31 if no shingles."""
-    sh = F.col(shingles_col_name)
-    return [
-        F.coalesce(F.array_min(F.transform(sh, lambda s: _hash_k(s, k))), F.lit(P31).cast("long")).alias(
-            f"mh_{k}"
-        )
-        for k in range(n_hashes)
-    ]
-
-
 def band_hash_col(n_hashes: int, rows_per_band: int, band: int) -> Column:
     """Combine ``rows_per_band`` consecutive minhashes into one band bucket key."""
     h = F.lit(0).cast("long")

@@ -16,7 +16,11 @@ Reference semantics re-expressed (SURVEY.md §2.5):
 * W6 sessionize — gap-based session ids: flag gap > threshold, running sum of
   flags. Identical formulation to DuckDB window SQL so oracles are exact.
 
-* A4 rolling counts — event-time range frames over epoch seconds.
+* A4 rolling counts — event-time range frames.
+
+Every event-time operator takes one time domain: TimestampType, framed and
+chunked on unix_micros (NTZ input is normalized first; anything else is
+refused while the plan is built).
 """
 
 from __future__ import annotations
@@ -54,6 +58,17 @@ def _check_order_col(df: DataFrame, order_col: str | None) -> None:
         raise ValueError(f"order_col {order_col!r} must be a bigint column holding unix_micros(ts), got {got!r}")
 
 
+def _require_timestamp(df: DataFrame, ts: str, op: str) -> DataFrame:
+    """NTZ-normalize ``ts`` and refuse any other non-timestamp type: a bare
+    number has no unit, so framing it as seconds or as micros would each be
+    silently wrong for some caller."""
+    df = ntz_to_ts(df, ts)
+    got = dict(df.dtypes)[ts]
+    if got != "timestamp":
+        raise ValueError(f"{op} requires a TimestampType ts column, got {ts!r} of type {got!r}")
+    return df
+
+
 def explode_tokens(df: DataFrame, tokens_col: str = "tokens", keep: list[str] | None = None) -> DataFrame:
     """Per-token exploded view: one row per (doc, pos). Narrow — no shuffle.
 
@@ -85,24 +100,6 @@ def with_context_window(df: DataFrame, k: int = 2, tokens_col: str = "tokens", p
         df = df.withColumn(f"lag_{i}", context_col(tokens_col, pos_col, -i))
         df = df.withColumn(f"lead_{i}", context_col(tokens_col, pos_col, i))
     return df
-
-
-def shifted_col(tokens_col: str, offset: int) -> Column:
-    """The tokens array shifted by ``offset`` with sentinel padding.
-
-    shifted[p] = tokens[p+offset], START/END-padded — built array-side so the
-    per-doc cost is O(len) regardless of how the result is consumed.
-    """
-    toks = F.col(tokens_col)
-    n = F.size(toks)
-    i = abs(offset)
-    if offset < 0:
-        pad = F.array_repeat(F.lit(START_ID), F.least(F.lit(i), n))
-        body = F.slice(toks, 1, F.greatest(n - i, F.lit(0)))
-        return F.concat(pad, body)
-    pad = F.array_repeat(F.lit(END_ID), F.least(F.lit(i), n))
-    body = F.when(n > i, F.slice(toks, i + 1, n - i)).otherwise(F.array().cast("array<int>"))
-    return F.concat(body, pad)
 
 
 def explode_with_context(
@@ -157,7 +154,7 @@ def sessionize(
     backwards. Exactly equal to the serial result; parallelism becomes
     #entities * n_chunks.
     """
-    df = ntz_to_ts(df, ts)
+    df = _require_timestamp(df, ts, "sessionize")
     _check_order_col(df, order_col)
     tdouble = F.col(ts).cast("double")
     # order by integer micros (same ordering as the raw timestamp) so a
@@ -168,16 +165,9 @@ def sessionize(
     # computed expression that window resolution re-aliases to a fresh _w0
     # per operator) is what lets a downstream window's sort requirement
     # prefix-match this operator's sort order and be elided.
-    if order_col is not None:
-        lead = F.col(order_col)
-    else:
-        lead = (
-            F.unix_micros(F.col(ts))
-            if dict(df.dtypes)[ts].startswith("timestamp")
-            else F.col(ts)
-        )
+    lead = F.col(order_col) if order_col is not None else F.unix_micros(F.col(ts))
+    order = [lead.asc()] + [F.col(c).asc() for c in (order_extra or [])]
     if (not n_chunks or n_chunks <= 1) and chunk_col is None:
-        order = [lead.asc()] + [F.col(c).asc() for c in (order_extra or [])]
         w = Window.partitionBy(entity).orderBy(*order)
         gap = tdouble - F.lag(tdouble, 1).over(w)
         new_sess = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
@@ -191,8 +181,7 @@ def sessionize(
         # so this operator rides the upstream exchange instead of re-shuffling
         chunked, ch = df, chunk_col
     else:
-        chunked, ch = _with_time_chunk(df, entity, tdouble, n_chunks, bounds=bounds), "__chunk"
-    order = [lead.asc()] + [F.col(c).asc() for c in (order_extra or [])]
+        chunked, ch = with_time_chunk(df, entity, ts, n_chunks, bounds=bounds, chunk_col="__chunk"), "__chunk"
     w_loc = Window.partitionBy(entity, ch).orderBy(*order)
     gap = tdouble - F.lag(tdouble, 1).over(w_loc)
     new_sess = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
@@ -253,6 +242,9 @@ def _case_over_entities(build, bounds_us: dict, ent_col: str):
 
 
 def _chunk_of_expr(cus, bounds_us: dict, spans: dict, n_chunks: int, ent_col: str):
+    if not bounds_us:
+        # no bounds (empty input): every row is chunk 0
+        return F.lit(0)
     return F.coalesce(
         _case_over_entities(
             lambda k: F.greatest(
@@ -269,6 +261,19 @@ def _chunk_of_expr(cus, bounds_us: dict, spans: dict, n_chunks: int, ent_col: st
     )
 
 
+def _chunk_bounds_us(df: DataFrame, entity: str, ts: str, bounds: dict | None) -> dict:
+    """Integer-micros chunk bounds per entity: the caller's ``bounds`` or, when
+    None, one :func:`entity_time_bounds` collect over ``df``."""
+    if bounds is None:
+        bounds = entity_time_bounds(df, entity, ts)
+    if len(bounds) > 64:
+        raise ValueError(
+            f"n_chunks chunking is for low-cardinality/hot entities; {entity!r} has "
+            f"{len(bounds)} values — a plain per-entity window already parallelizes"
+        )
+    return _bounds_us(bounds)
+
+
 def with_time_chunk(
     df: DataFrame,
     entity: str,
@@ -277,18 +282,24 @@ def with_time_chunk(
     bounds: dict | None = None,
     chunk_col: str = "__tchunk",
 ) -> DataFrame:
-    """Add a per-entity time-range chunk column for SHARING one shuffle across
-    chunked operators: `rolling_count(..., chunk_col=...)` then
-    `sessionize(..., chunk_col=...)` both partition by (entity, chunk_col), so
-    the second operator reuses the first's exchange instead of re-shuffling
-    the wide payload. Requires TimestampType ``ts``.
+    """Assign each row a per-entity time-range chunk id in [0, n_chunks).
+
+    Range chunking (not hash) keeps equal timestamps together and preserves
+    order across chunks — required for exact scan merging. Bounds are a tiny
+    per-entity min/max aggregate collected ONCE to the driver and inlined as
+    literal CASE branches: a broadcast-join would re-execute per plan branch
+    and add an exchange + stage per consumer. Rows whose entity is missing
+    from ``bounds`` (or whose ts falls outside) clamp into chunk 0 /
+    n_chunks-1 — correctness never depends on bounds being tight, only
+    parallelism does.
+
+    The column is also how chunked operators SHARE one shuffle:
+    `rolling_count(..., chunk_col=...)` then `sessionize(..., chunk_col=...)`
+    both partition by (entity, chunk_col), so the second operator reuses the
+    first's exchange instead of re-shuffling the wide payload.
     """
-    df = ntz_to_ts(df, ts)
-    if not dict(df.dtypes)[ts].startswith("timestamp"):
-        raise ValueError("with_time_chunk requires a TimestampType ts column")
-    if bounds is None:
-        bounds = entity_time_bounds(df, entity, ts)
-    bus = _bounds_us(bounds)
+    df = _require_timestamp(df, ts, "with_time_chunk")
+    bus = _chunk_bounds_us(df, entity, ts, bounds)
     spans = _spans_us(bus, n_chunks)
     return df.withColumn(
         chunk_col, _chunk_of_expr(F.unix_micros(F.col(ts)), bus, spans, n_chunks, entity)
@@ -308,43 +319,6 @@ def entity_time_bounds(df: DataFrame, entity: str, ts: str) -> dict:
     tdouble = F.col(ts).cast("double")
     rows = df.groupBy(entity).agg(F.min(tdouble).alias("mn"), F.max(tdouble).alias("mx")).collect()
     return {r[entity]: (r["mn"], r["mx"]) for r in rows}
-
-
-def _with_time_chunk(
-    df: DataFrame, entity: str, tdouble, n_chunks: int, bounds: dict | None = None
-) -> DataFrame:
-    """Assign each row a per-entity time-range chunk id in [0, n_chunks).
-
-    Range chunking (not hash) keeps equal timestamps together and preserves
-    order across chunks — required for exact scan merging. Bounds are a tiny
-    per-entity min/max aggregate collected ONCE to the driver and inlined as
-    literal CASE branches: a broadcast-join would re-execute per plan branch
-    and add an exchange + stage per consumer, which dominates wall time on
-    small-to-medium inputs. Rows whose entity is missing from ``bounds`` (or
-    whose ts falls outside) clamp into chunk 0 / n_chunks-1 — correctness never
-    depends on bounds being tight, only parallelism does.
-    """
-    if bounds is None:
-        rows = df.groupBy(entity).agg(F.min(tdouble).alias("mn"), F.max(tdouble).alias("mx")).collect()
-        bounds = {r[entity]: (r["mn"], r["mx"]) for r in rows}
-    if len(bounds) > 64:
-        raise ValueError(
-            f"n_chunks chunking is for low-cardinality/hot entities; {entity!r} has "
-            f"{len(bounds)} values — a plain per-entity window already parallelizes"
-        )
-    expr = None
-    for ent, (mn, mx) in bounds.items():
-        if mn is None or mx is None or mx <= mn:
-            branch = F.lit(0)
-        else:
-            span = (mx - mn) / n_chunks
-            branch = F.greatest(
-                F.least(F.floor((tdouble - F.lit(mn)) / F.lit(span)), F.lit(n_chunks - 1)), F.lit(0)
-            )
-        cond = F.col(entity).isNull() if ent is None else (F.col(entity) == F.lit(ent))
-        expr = F.when(cond, branch) if expr is None else expr.when(cond, branch)
-    chunk = F.coalesce(expr, F.lit(0)) if expr is not None else F.lit(0)
-    return df.withColumn("__chunk", chunk.cast("int"))
 
 
 def _rolling_chunked_frames(
@@ -379,8 +353,9 @@ def _rolling_chunked_frames(
     aggregate, no offset spine, no full-data second pass — at scale this is
     one full shuffle of the narrow frame, full stop.
 
-    Returns None when any entity's window spans >= its chunk span (every row
-    would be a boundary row — the probe-stream path handles that better).
+    Returns None when there are no bounds or any entity's window spans >=
+    its chunk span (a row's window could then reach past the previous
+    chunk); :func:`rolling_count` then runs its serial frames.
 
     ``order_col``: a MATERIALIZED column holding exactly unix_micros(ts)
     (same contract as :func:`sessionize`): windows then order by the shared
@@ -389,16 +364,7 @@ def _rolling_chunked_frames(
     """
     tus = F.col(order_col) if order_col is not None else F.unix_micros(F.col(ts))
     wus = window_seconds * 1_000_000
-    if bounds is None:
-        rows = df.groupBy(entity).agg(F.min(tus).alias("mn"), F.max(tus).alias("mx")).collect()
-        bounds_us = {r[entity]: (r["mn"], r["mx"]) for r in rows}
-    else:
-        bounds_us = _bounds_us(bounds)
-    if len(bounds_us) > 64:
-        raise ValueError(
-            f"n_chunks chunking is for low-cardinality/hot entities; {entity!r} has "
-            f"{len(bounds_us)} values — a plain per-entity window already parallelizes"
-        )
+    bounds_us = _chunk_bounds_us(df, entity, ts, bounds)
     spans = _spans_us(bounds_us, n_chunks)
     if not bounds_us or any(wus >= span for span in spans.values()):
         return None
@@ -517,35 +483,35 @@ def rolling_count(
 
     Frame: [ts - window_seconds, ts] inclusive, per entity. Equal-ts rows
     share the same value (SQL RANGE semantics — the DuckDB oracle is exact).
+    Three paths:
 
-    strategy="difference" (default, the scale path): Spark's WindowExec
-    recomputes SLIDING frames from scratch per row — O(n * rows_in_window) —
-    which degenerates catastrophically on dense timestamps. GROWING frames
-    (unboundedPreceding -> currentRow) are incremental, so we compute
-        rolling(t) = cum_le(t) - cnt_lt(t - W)
-    with growing-frame passes: cum_le over the events, and cnt_lt via PROBE
-    rows at (ts - W) unioned into the stream (probes sort BEFORE events at
-    equal time, giving the strict <), joined back by a per-entity row number.
-    O(n log n) total, JVM-only.
+    * ``strategy="range"``: the naive sliding RANGE frame — the semantics
+      reference the tests compare against. Spark's WindowExec recomputes a
+      sliding frame from scratch per row, O(n * rows_in_window), which
+      degenerates on dense timestamps.
+    * ``strategy="difference"`` (default): two ADD-ONLY range frames over
+      integer microseconds,
+          rolling(t) = cum_le(t) - cnt_lt(t - W)
+      with cum_le = [unbounded, 0] and cnt_lt = [unbounded, -(W*1e6 + 1)]
+      (strict < via the -1µs on an integer domain), evaluated in ONE
+      WindowExec sharing one sort: one shuffle on ``entity``, no joins.
+      Spark's UnboundedPreceding frames advance their upper pointer
+      monotonically (O(n)), unlike sliding frames which rescan.
+    * ``strategy="difference"`` with ``n_chunks > 1``: the same frames per
+      (entity, time chunk) plus a chunk-tail sideband
+      (:func:`_rolling_chunked_frames`) — the scale path for hot,
+      low-cardinality entities. When the window reaches a whole chunk span
+      it falls back to the serial frames above (same result, parallelism
+      capped at #entities).
 
-    strategy="range": the naive RANGE frame — fine for sparse windows, kept
-    for tiny inputs and as the semantics reference.
-
-    ``order_col`` (difference-strategy paths): a caller-MATERIALIZED column
-    holding exactly ``unix_micros(ts)``. Ordering windows by the shared
-    attribute (instead of a computed expression that resolution re-aliases
-    per operator) lets adjacent window operators collapse into one
-    WindowExec and lets an upstream sort on the same attribute satisfy this
-    operator's ordering requirement (see :func:`sessionize`).
-
-    Fast path (unchunked + TimestampType ts): both terms are ADD-ONLY range
-    frames over integer microseconds — cum_le = [unbounded, 0] and cnt_lt =
-    [unbounded, -(W*1e6 + 1)] (strict < via the -1µs on an integer domain) —
-    evaluated in ONE WindowExec sharing one sort: one shuffle, zero probe
-    rows, zero joins. Spark's UnboundedPreceding frames advance their upper
-    pointer monotonically (O(n)), unlike sliding frames which rescan.
+    ``order_col`` (difference paths): a caller-MATERIALIZED column holding
+    exactly ``unix_micros(ts)``. Ordering windows by the shared attribute
+    (instead of a computed expression that resolution re-aliases per
+    operator) lets adjacent window operators collapse into one WindowExec
+    and lets an upstream sort on the same attribute satisfy this operator's
+    ordering requirement (see :func:`sessionize`).
     """
-    df = ntz_to_ts(df, ts)
+    df = _require_timestamp(df, ts, "rolling_count")
     _check_order_col(df, order_col)
     if strategy == "range":
         w = (
@@ -559,140 +525,28 @@ def rolling_count(
     if strategy != "difference":
         raise ValueError(f"unknown strategy {strategy!r}")
 
-    tdouble = F.col(ts).cast("double")
     delta_type = "long" if value_col is None else dict(df.dtypes)[value_col]
-    ts_is_timestamp = dict(df.dtypes)[ts].startswith("timestamp")
-
-    if n_chunks and n_chunks > 1 and ts_is_timestamp:
+    if n_chunks and n_chunks > 1:
         out = _rolling_chunked_frames(
             df, entity, ts, int(window_seconds), out_col, value_col, n_chunks, bounds,
             delta_type, chunk_col=chunk_col, order_col=order_col,
         )
         if out is not None:
             return out
-        # fall through to the probe-stream formulation (window >= chunk span)
+        # window >= chunk span: serial frames partitioned by entity
 
-    if (not n_chunks or n_chunks <= 1) and ts_is_timestamp:
-        tus = F.col(order_col) if order_col is not None else F.unix_micros(F.col(ts))
-        w_le = Window.partitionBy(entity).orderBy(tus).rangeBetween(Window.unboundedPreceding, 0)
-        w_lt = Window.partitionBy(entity).orderBy(tus).rangeBetween(
-            Window.unboundedPreceding, -(int(window_seconds) * 1_000_000 + 1)
-        )
-        delta = F.lit(1).cast("long") if value_col is None else F.col(value_col)
-        result = F.sum(delta).over(w_le) - F.coalesce(
-            F.sum(delta).over(w_lt), F.lit(0).cast(delta_type)
-        )
-        if value_col is None:
-            result = result.cast("long")
-        return df.withColumn(out_col, result)
-
-    if n_chunks and n_chunks > 1:
-        # scale path for hot/low-cardinality entities: chunk each entity by
-        # time range, compute local running totals, add broadcast per-chunk
-        # offsets (cumulative totals of earlier chunks). Equal timestamps
-        # stay in one chunk, so RANGE semantics are preserved exactly.
-        base = _with_time_chunk(df, entity, tdouble, n_chunks, bounds=bounds)
-        w_loc_grow = (
-            Window.partitionBy(entity, "__chunk").orderBy(tdouble)
-            .rangeBetween(Window.unboundedPreceding, 0)
-        )
-        w_loc_rid = Window.partitionBy(entity, "__chunk").orderBy(tdouble)
-        loc_delta = F.lit(1).cast("long") if value_col is None else F.col(value_col)
-        totals = base.groupBy(entity, "__chunk").agg(
-            F.sum(loc_delta).alias("__tot"), F.count(F.lit(1)).alias("__rows")
-        )
-        w_ch = Window.partitionBy(entity).orderBy("__chunk").rowsBetween(Window.unboundedPreceding, -1)
-        offs = totals.select(
-            entity, "__chunk",
-            F.coalesce(F.sum("__tot").over(w_ch), F.lit(0).cast(delta_type)).alias("__coff"),
-            F.coalesce(F.sum("__rows").over(w_ch), F.lit(0)).alias("__roff"),
-        )
-        # one projection so both frames share one Window node (see
-        # _rolling_chunked_frames for why separate withColumns plan 2 sorts)
-        ev = (
-            base.select(
-                "*",
-                F.sum(loc_delta).over(w_loc_grow).alias("__lcum"),
-                F.row_number().over(w_loc_rid).alias("__lrn"),
-            )
-            .join(F.broadcast(offs), [entity, "__chunk"])
-            .withColumn("__cum_le", F.col("__lcum") + F.col("__coff"))
-            .withColumn("__rid", (F.col("__lrn") + F.col("__roff")).cast("long"))
-            .drop("__chunk", "__lcum", "__lrn", "__coff", "__roff")
-        )
-        if value_col is None:
-            ev = ev.withColumn("__cum_le", F.col("__cum_le").cast("long"))
-    else:
-        w_grow = Window.partitionBy(entity).orderBy(tdouble).rangeBetween(Window.unboundedPreceding, 0)
-        w_rid = Window.partitionBy(entity).orderBy(tdouble)
-        if value_col is None:
-            cum_le = F.count(F.lit(1)).over(w_grow).cast("long")
-        else:
-            cum_le = F.sum(F.col(value_col)).over(w_grow)
-        # one projection -> one Window node for both frames (see above)
-        ev = df.select(
-            "*", cum_le.alias("__cum_le"), F.row_number().over(w_rid).cast("long").alias("__rid")
-        )
-
-    # probe stream at ts - W; __side 0 sorts before events at equal time -> strict <
-    probes = ev.select(
-        F.col(entity).alias("__ent"),
-        (tdouble - F.lit(float(window_seconds))).alias("__t"),
-        F.lit(0).alias("__side"),
-        F.col("__rid").alias("__prid"),
-        F.lit(None).cast(delta_type).alias("__delta"),
+    tus = F.col(order_col) if order_col is not None else F.unix_micros(F.col(ts))
+    w_le = Window.partitionBy(entity).orderBy(tus).rangeBetween(Window.unboundedPreceding, 0)
+    w_lt = Window.partitionBy(entity).orderBy(tus).rangeBetween(
+        Window.unboundedPreceding, -(int(window_seconds) * 1_000_000 + 1)
     )
-    events = ev.select(
-        F.col(entity).alias("__ent"),
-        tdouble.alias("__t"),
-        F.lit(1).alias("__side"),
-        F.lit(None).cast("long").alias("__prid"),
-        (F.lit(1).cast("long") if value_col is None else F.col(value_col)).alias("__delta"),
+    delta = F.lit(1).cast("long") if value_col is None else F.col(value_col)
+    result = F.sum(delta).over(w_le) - F.coalesce(
+        F.sum(delta).over(w_lt), F.lit(0).cast(delta_type)
     )
-    merged_src = events.unionByName(probes)
-    if n_chunks and n_chunks > 1:
-        # merged stream spans [mn - W, mx] (probe rows sit at ts - W): derive
-        # its bounds analytically from the event bounds — no second collect
-        mbounds = None
-        if bounds is not None:
-            w = float(window_seconds)
-            mbounds = {k: (mn - w if mn is not None else None, mx) for k, (mn, mx) in bounds.items()}
-        merged_src = _with_time_chunk(merged_src, "__ent", F.col("__t"), n_chunks, bounds=mbounds)
-        w_loc_cum = (
-            Window.partitionBy("__ent", "__chunk")
-            .orderBy(F.col("__t").asc(), F.col("__side").asc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        mtotals = merged_src.groupBy("__ent", "__chunk").agg(F.sum("__delta").alias("__tot"))
-        w_mch = Window.partitionBy("__ent").orderBy("__chunk").rowsBetween(Window.unboundedPreceding, -1)
-        moffs = mtotals.select(
-            "__ent", "__chunk",
-            F.coalesce(F.sum("__tot").over(w_mch), F.lit(0).cast(delta_type)).alias("__moff"),
-        )
-        merged = (
-            merged_src.withColumn("__lc", F.coalesce(F.sum("__delta").over(w_loc_cum), F.lit(0).cast(delta_type)))
-            .join(F.broadcast(moffs), ["__ent", "__chunk"])
-            .withColumn("__cnt_lt", F.col("__lc") + F.col("__moff"))
-        )
-    else:
-        w_cum = (
-            Window.partitionBy("__ent")
-            .orderBy(F.col("__t").asc(), F.col("__side").asc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        merged = merged_src.withColumn(
-            "__cnt_lt", F.coalesce(F.sum("__delta").over(w_cum), F.lit(0).cast(delta_type))
-        )
-    probe_res = merged.filter(F.col("__side") == 0).select("__ent", "__prid", "__cnt_lt")
-    out = ev.join(
-        probe_res,
-        (ev[entity] == probe_res["__ent"]) & (ev["__rid"] == probe_res["__prid"]),
-        "left",
-    )
-    result = F.col("__cum_le") - F.coalesce(F.col("__cnt_lt"), F.lit(0).cast(delta_type))
     if value_col is None:
         result = result.cast("long")
-    return out.select(*[F.col(c) for c in df.columns], result.alias(out_col))
+    return df.withColumn(out_col, result)
 
 
 def session_features(
@@ -765,12 +619,8 @@ def rolling_distinct(
     Shares the (entity) Exchange and the integer-micros sort with
     rolling_count's fast path — composing both adds no shuffle.
     """
-    df = ntz_to_ts(df, ts)
-    us = (
-        F.unix_micros(F.col(ts))
-        if dict(df.dtypes)[ts].startswith("timestamp")
-        else F.col(ts)
-    )
+    df = _require_timestamp(df, ts, "rolling_distinct")
+    us = F.unix_micros(F.col(ts))
     w = (
         Window.partitionBy(entity)
         .orderBy(us.asc())

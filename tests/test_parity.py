@@ -218,14 +218,17 @@ def test_shared_chunk_col_matches_serial(spark, fixture_dir):
     )
     bounds = entity_time_bounds(seqs, "source", "seq_ts")
     shared = with_time_chunk(seqs, "source", "seq_ts", 5, bounds=bounds)
-    a = rolling_count(shared, "source", "seq_ts", 3600, "rn", n_chunks=5, bounds=bounds, chunk_col="__tchunk")
-    a = sessionize(a, "source", "seq_ts", 60.0, order_extra=["doc_id", "n_tok"],
-                   n_chunks=5, bounds=bounds, chunk_col="__tchunk").drop("__tchunk")
-    b = rolling_count(seqs, "source", "seq_ts", 3600, "rn")
-    b = sessionize(b, "source", "seq_ts", 60.0, order_extra=["doc_id", "n_tok"])
+    # 50_000 s is at least the chunk span: rolling falls back to the serial
+    # frames on a frame that still carries the shared chunk column
     sel = ["doc_id", "seq_ts", "n_tok", "source", "rn", "session_id"]
-    assert a.select(sel).exceptAll(b.select(sel)).count() == 0
-    assert b.select(sel).exceptAll(a.select(sel)).count() == 0
+    for win in [3600, 50_000]:
+        a = rolling_count(shared, "source", "seq_ts", win, "rn", n_chunks=5, bounds=bounds, chunk_col="__tchunk")
+        a = sessionize(a, "source", "seq_ts", 60.0, order_extra=["doc_id", "n_tok"],
+                       n_chunks=5, bounds=bounds, chunk_col="__tchunk").drop("__tchunk")
+        b = rolling_count(seqs, "source", "seq_ts", win, "rn")
+        b = sessionize(b, "source", "seq_ts", 60.0, order_extra=["doc_id", "n_tok"])
+        assert a.select(sel).exceptAll(b.select(sel)).count() == 0, win
+        assert b.select(sel).exceptAll(a.select(sel)).count() == 0, win
 
 
 def test_order_col_must_be_bigint_micros(spark, fixture_dir):
@@ -247,3 +250,24 @@ def test_order_col_must_be_bigint_micros(spark, fixture_dir):
             with pytest.raises(ValueError, match="order_col"):
                 op(bad)
         op(seqs.withColumn("__ous", F.unix_micros("seq_ts")))
+
+
+def test_window_ops_require_timestamp_ts(spark):
+    """One time domain: a bare-number ts (here bigint epoch seconds) has no
+    unit, so every event-time window operator refuses it while the plan is
+    built instead of framing it as seconds or micros."""
+    import pytest
+
+    from marmot_spark.operators.windows import rolling_count, rolling_distinct, with_time_chunk
+
+    df = spark.createDataFrame([("a", 0, 1), ("a", 10, 2), ("a", 5000, 1)], "ent string, ts bigint, v int")
+    ops = (
+        lambda: sessionize(df, "ent", "ts", 60.0),
+        lambda: rolling_count(df, "ent", "ts", 3600, "rn"),
+        lambda: rolling_count(df, "ent", "ts", 3600, "rn", strategy="range"),
+        lambda: rolling_distinct(df, "ent", "ts", 3600, "v"),
+        lambda: with_time_chunk(df, "ent", "ts", 4, bounds={"a": (0.0, 5000.0)}),
+    )
+    for op in ops:
+        with pytest.raises(ValueError, match="TimestampType"):
+            op()
