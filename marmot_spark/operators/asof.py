@@ -56,7 +56,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from marmot_spark.operators.windows import ntz_to_ts
+from marmot_spark.operators.windows import _chunk_of_expr, _spans_us, entity_time_bounds, ntz_to_ts
 
 _SIDE = "__asof_side"
 _SALT = "__asof_salt"
@@ -93,21 +93,6 @@ def detect_hot_keys(df: DataFrame, key: str, threshold: float = 0.05) -> list:
     return [r[0] for r in rows]
 
 
-def _range_chunk_expr(ts_col, hot_bounds_us: dict, n_salts: int):
-    """Literal-CASE time-range chunk id for hot keys (ts in integer micros)."""
-    cus = F.unix_micros(ts_col)
-    expr = None
-    for key, (mnus, mxus) in hot_bounds_us.items():
-        span = max((mxus - mnus) // n_salts, 1)
-        branch = F.greatest(
-            F.least(F.floor((cus - F.lit(mnus)) / F.lit(span)).cast("int"), F.lit(n_salts - 1)),
-            F.lit(0),
-        )
-        cond = F.col("__rk") == F.lit(key)
-        expr = F.when(cond, branch) if expr is None else expr.when(cond, branch)
-    return F.lit(0) if expr is None else F.coalesce(expr, F.lit(0))
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -130,7 +115,8 @@ def asof_join(
     ``hot_keys`` are range-salted into ``n_salts`` time chunks (module
     docstring). The per-key chunk bounds come from one tiny agg over the hot
     left rows — or pass ``hot_bounds_us``, a ``{key: (min_us, max_us)}``
-    dict computed on the CHEAPEST equivalent frame, e.g. the raw scan:
+    dict in the ``entity_time_bounds`` format (integer micros) computed on
+    the CHEAPEST equivalent frame, e.g. the raw scan:
     collecting bounds from a derived ``left`` re-executes the whole upstream
     plan at plan-build time, and chunk balance — never correctness — is all
     the bounds affect. Hot keys need a single join key and TimestampType
@@ -160,16 +146,10 @@ def asof_join(
             raise ValueError("asof_join hot_keys salting supports a single join key")
         if not all(dict(df.dtypes)[c].startswith("timestamp") for df, c in ((left, left_ts), (right, right_ts))):
             raise ValueError("asof_join hot_keys salting requires TimestampType timestamps")
-        hot = F.col(keys[0]).isin(hot_keys)
+        key = keys[0]
+        hot = F.col(key).isin(hot_keys)
         if hot_bounds_us is None:
-            b = (
-                left.filter(hot)
-                .groupBy(F.col(keys[0]).alias("__rk"))
-                .agg(F.min(F.unix_micros(F.col(left_ts))).alias("mn"),
-                     F.max(F.unix_micros(F.col(left_ts))).alias("mx"))
-                .collect()
-            )
-            hot_bounds_us = {r["__rk"]: (r["mn"], r["mx"]) for r in b}
+            hot_bounds_us = entity_time_bounds(left.filter(hot), key, left_ts)
         else:
             usable = {
                 k: v for k, v in hot_bounds_us.items()
@@ -185,18 +165,15 @@ def asof_join(
                     stacklevel=2,
                 )
             hot_bounds_us = usable
-        l_salt = F.when(
-            hot,
-            _range_chunk_expr(F.col(left_ts), hot_bounds_us, n_salts),
-        ).otherwise(F.lit(0))
-        r_salt = F.when(
-            hot, _range_chunk_expr(F.col(right_ts), hot_bounds_us, n_salts)
-        ).otherwise(F.lit(0))
-        # chunk-expr CASE keys off __rk; expose it on both sides
-        left = left.withColumn("__rk", F.col(keys[0]))
-        right = right.withColumn("__rk", F.col(keys[0]))
+        spans = _spans_us(hot_bounds_us, n_salts)
+
+        def salt(ts):
+            chunk = _chunk_of_expr(F.unix_micros(F.col(ts)), hot_bounds_us, spans, n_salts, key)
+            return F.when(hot, chunk).otherwise(F.lit(0))
+
+        l_salt, r_salt = salt(left_ts), salt(right_ts)
         carry_rhs = _boundary_carries(
-            right, keys[0], right_ts, list(payload), tie_break, hot_bounds_us, n_salts
+            right, key, right_ts, list(payload), tie_break, hot_bounds_us, n_salts
         )
 
     tie_l = F.lit(0).cast("long")  # left rows sort AFTER right rows at equal ts via _SIDE
@@ -207,7 +184,7 @@ def asof_join(
         lhs = lhs.withColumn(c, F.lit(None).cast(dict(right.dtypes)[c]))
     lhs = lhs.withColumn(_MATCH_TS, F.lit(None).cast(dict(right.dtypes)[right_ts]))
 
-    rhs = right.select(keys + [right_ts] + list(payload) + ([tie_break] if tie_break else []) + (["__rk"] if hot_keys else []))
+    rhs = right.select(keys + [right_ts] + list(payload) + ([tie_break] if tie_break else []))
     rhs = (
         rhs.withColumn(_SALT, r_salt)
         .withColumn(_SIDE, F.lit(0))
@@ -215,11 +192,10 @@ def asof_join(
         .withColumn(_TIE, tie_r)
         .withColumn(_MATCH_TS, F.col(right_ts))
     )
-    left_cols_all = left.columns  # includes __rk when salted
-    for c in left_cols_all:
+    for c in left_cols:
         if c not in rhs.columns:
             rhs = rhs.withColumn(c, F.lit(None).cast(dict(left.dtypes)[c]))
-    union_cols = left_cols_all + list(payload) + [_SALT, _SIDE, _TS, _TIE, _MATCH_TS]
+    union_cols = left_cols + list(payload) + [_SALT, _SIDE, _TS, _TIE, _MATCH_TS]
     merged = lhs.select(union_cols).unionByName(rhs.select(union_cols))
     if carry_rhs is not None:
         for c in union_cols:
@@ -285,12 +261,9 @@ def _boundary_carries(
     result: per (key, boundary) the row with max (ts, tie) among rows
     strictly before the boundary.
     """
-    brows = []
-    for k, (mnus, mxus) in hot_bounds_us.items():
-        span = max((mxus - mnus) // n_salts, 1)
-        for c in range(1, n_salts):
-            # integer micros: <= boundary-1us == strictly < boundary
-            brows.append((k, c, mnus + c * span - 1))
+    spans = _spans_us(hot_bounds_us, n_salts)
+    # integer micros: <= boundary-1us == strictly < boundary
+    brows = [(k, c, mnus + c * spans[k] - 1) for k, (mnus, _) in hot_bounds_us.items() for c in range(1, n_salts)]
     if not brows:
         return None
     key_type = dict(right.dtypes)[key]
@@ -314,7 +287,6 @@ def _boundary_carries(
     )
     return best.select(
         F.col(key),
-        F.col(key).alias("__rk"),
         F.col("__carry_salt").alias(_SALT),
         F.lit(0).alias(_SIDE),
         F.col("__best.__ots").alias(_TS),

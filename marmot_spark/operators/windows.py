@@ -152,7 +152,8 @@ def sessionize(
     computes boundary offsets: a chunk whose first event is within
     gap_seconds of the previous chunk's last event merges its first session
     backwards. Exactly equal to the serial result; parallelism becomes
-    #entities * n_chunks.
+    #entities * n_chunks. ``bounds``: precomputed chunk bounds in the
+    :func:`entity_time_bounds` format (integer micros); None collects them.
     """
     df = _require_timestamp(df, ts, "sessionize")
     _check_order_col(df, order_col)
@@ -219,16 +220,6 @@ def sessionize(
     return out.drop("__chunk") if chunk_col is None else out
 
 
-def _bounds_us(bounds: dict) -> dict:
-    """Seconds-domain bounds dict -> integer-micros dict (single rounding rule
-    shared by every consumer so chunk ids and chunk starts always agree)."""
-    return {
-        k: (int(round(mn * 1e6)), int(round(mx * 1e6)))
-        for k, (mn, mx) in bounds.items()
-        if mn is not None and mx is not None
-    }
-
-
 def _spans_us(bounds_us: dict, n_chunks: int) -> dict:
     return {k: max((mx - mn) // n_chunks, 1) for k, (mn, mx) in bounds_us.items()}
 
@@ -262,8 +253,9 @@ def _chunk_of_expr(cus, bounds_us: dict, spans: dict, n_chunks: int, ent_col: st
 
 
 def _chunk_bounds_us(df: DataFrame, entity: str, ts: str, bounds: dict | None) -> dict:
-    """Integer-micros chunk bounds per entity: the caller's ``bounds`` or, when
-    None, one :func:`entity_time_bounds` collect over ``df``."""
+    """Chunk bounds per entity: the caller's ``bounds`` or, when None, one
+    :func:`entity_time_bounds` collect over ``df``; entries without a min or
+    max (an entity whose ts is all NULL) are dropped, so they chunk as 0."""
     if bounds is None:
         bounds = entity_time_bounds(df, entity, ts)
     if len(bounds) > 64:
@@ -271,7 +263,7 @@ def _chunk_bounds_us(df: DataFrame, entity: str, ts: str, bounds: dict | None) -
             f"n_chunks chunking is for low-cardinality/hot entities; {entity!r} has "
             f"{len(bounds)} values — a plain per-entity window already parallelizes"
         )
-    return _bounds_us(bounds)
+    return {k: (mn, mx) for k, (mn, mx) in bounds.items() if mn is not None and mx is not None}
 
 
 def with_time_chunk(
@@ -285,7 +277,9 @@ def with_time_chunk(
     """Assign each row a per-entity time-range chunk id in [0, n_chunks).
 
     Range chunking (not hash) keeps equal timestamps together and preserves
-    order across chunks — required for exact scan merging. Bounds are a tiny
+    order across chunks — required for exact scan merging. Bounds
+    (``{entity: (min_us, max_us)}`` in integer micros, as
+    :func:`entity_time_bounds` returns; None collects them) are a tiny
     per-entity min/max aggregate collected ONCE to the driver and inlined as
     literal CASE branches: a broadcast-join would re-execute per plan branch
     and add an exchange + stage per consumer. Rows whose entity is missing
@@ -307,17 +301,20 @@ def with_time_chunk(
 
 
 def entity_time_bounds(df: DataFrame, entity: str, ts: str) -> dict:
-    """Per-entity (min, max) of ``ts`` as double — one tiny aggregate, collected once.
+    """``{entity: (min_us, max_us)}``: per-entity min/max of
+    ``unix_micros(ts)`` as Python ints — one tiny aggregate, collected once.
 
-    Compute this on the CHEAPEST upstream frame (usually the raw scan) and pass
-    it to ``sessionize``/``rolling_count`` via ``bounds=``: chunking only needs
-    the time range per entity, and row-preserving operators upstream don't
-    change it. Without precomputed bounds each chunked operator collects its
-    own, which re-executes the whole upstream plan at plan-build time.
+    This is the one bounds format: ``bounds=`` of :func:`with_time_chunk`,
+    :func:`sessionize` and :func:`rolling_count`, and ``hot_bounds_us=`` of
+    ``asof_join``. Compute it on the CHEAPEST upstream frame (usually the raw
+    scan) and pass it on: chunking only needs the time range per entity, and
+    row-preserving operators upstream don't change it. Without precomputed
+    bounds each chunked operator collects its own, which re-executes the
+    whole upstream plan at plan-build time.
     """
-    df = ntz_to_ts(df, ts)
-    tdouble = F.col(ts).cast("double")
-    rows = df.groupBy(entity).agg(F.min(tdouble).alias("mn"), F.max(tdouble).alias("mx")).collect()
+    df = _require_timestamp(df, ts, "entity_time_bounds")
+    us = F.unix_micros(F.col(ts))
+    rows = df.groupBy(entity).agg(F.min(us).alias("mn"), F.max(us).alias("mx")).collect()
     return {r[entity]: (r["mn"], r["mx"]) for r in rows}
 
 
@@ -396,13 +393,16 @@ def _rolling_chunked_frames(
         F.row_number().over(w_ord).cast("long").alias("__lrn"),
     )
 
-    start = F.coalesce(
-        _case_over_entities(
-            lambda k: F.lit(bounds_us[k][0]) + F.col(ch).cast("long") * F.lit(spans[k]),
-            bounds_us, entity,
-        ),
-        F.lit(0).cast("long"),
-    )
+    def chunk_start(chunk):
+        return F.coalesce(
+            _case_over_entities(
+                lambda k: F.lit(bounds_us[k][0]) + chunk.cast("long") * F.lit(spans[k]),
+                bounds_us, entity,
+            ),
+            F.lit(0).cast("long"),
+        )
+
+    start = chunk_start(F.col(ch))
     p = tus - F.lit(wus)
     # chunk 0 has no earlier chunk: every event below the probe point is
     # in-chunk (clamped rows included), so llt already covers it — interior
@@ -418,15 +418,7 @@ def _rolling_chunked_frames(
     # point (plus loose-bounds clamped strays) — chunk_of(ts + W) names the
     # chunk whose probes the event can serve; keep iff ts < that chunk's
     # start (i.e. the event lies strictly before the served chunk)
-    serve = chunk_of(tus + F.lit(wus), entity)
-    serve_start = F.coalesce(
-        _case_over_entities(
-            lambda k: F.lit(bounds_us[k][0]) + serve.cast("long") * F.lit(spans[k]),
-            bounds_us, entity,
-        ),
-        F.lit(0).cast("long"),
-    )
-    tail = base.filter(tus < serve_start).select(
+    tail = base.filter(tus < chunk_start(chunk_of(tus + F.lit(wus), entity))).select(
         F.col(entity).alias("__ent"), tus.alias("__tus"), F.lit(1).alias("__side"),
         F.lit(None).cast("int").alias("__pchunk"), F.lit(None).cast("long").alias("__prn"),
         delta.cast(delta_type).alias("__delta"),
@@ -502,7 +494,8 @@ def rolling_count(
       (:func:`_rolling_chunked_frames`) — the scale path for hot,
       low-cardinality entities. When the window reaches a whole chunk span
       it falls back to the serial frames above (same result, parallelism
-      capped at #entities).
+      capped at #entities). ``bounds``: as for :func:`sessionize`, the
+      :func:`entity_time_bounds` format in integer micros.
 
     ``order_col`` (difference paths): a caller-MATERIALIZED column holding
     exactly ``unix_micros(ts)``. Ordering windows by the shared attribute
@@ -579,7 +572,7 @@ def session_features(
     is safe at web scale: a session is gap-bounded, so no partition-sized
     frame exists.
     """
-    df = ntz_to_ts(df, ts)
+    df = _require_timestamp(df, ts, "session_features")
     p = prefix
     us = F.unix_micros(F.col(ts))
     w = Window.partitionBy(entity, session_col)

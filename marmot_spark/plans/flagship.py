@@ -18,9 +18,10 @@ Scale shape (the properties the plan-audit suite pins on the bench gate):
   bearing scan. The wide ``tokens`` arrays (~85% of scan bytes) NEVER enter
   a shuffle.
 * ONE plan-build collect. All per-entity chunk bounds AND per-hot-key as-of
-  salt ranges come from a single unioned aggregate over the narrow scan;
-  each operator collecting its own would re-execute the upstream plan at
-  plan-build time.
+  salt ranges come from one aggregate over the narrow scan, grouped by
+  (entity, hot key) in their native key types and folded on the driver
+  into the two ``entity_time_bounds``-format maps; each operator collecting
+  its own would re-execute the upstream plan at plan-build time.
 * SHARED chunk exchange. ``with_time_chunk`` emits one (entity, chunk)
   column that both chunked operators partition by, so sessionize reuses
   rolling_count's exchange.
@@ -92,36 +93,26 @@ def flagship_features(
     narrow = wide.select(*keys, ts_col)
     hot_keys = list(hot_keys) if hot_keys else []
 
-    bounds = None
-    hot_bounds_us = None
-    if n_chunks > 1 or hot_keys:
-        # ONE collect for every plan-time bound (chunk spans + salt ranges)
-        ts_d = F.col(ts_col).cast("double")
-        probe = narrow.groupBy(
-            F.lit(0).alias("__g"), F.col(entity_col).cast("string").alias("__k")
-        ).agg(F.min(ts_d).alias("mn"), F.max(ts_d).alias("mx"))
-        if hot_keys:
-            probe = probe.unionByName(
-                narrow.filter(F.col(asof_on).isin(hot_keys))
-                .groupBy(F.lit(1).alias("__g"), F.col(asof_on).cast("string").alias("__k"))
-                .agg(
-                    F.min(F.unix_micros(ts_col).cast("double")).alias("mn"),
-                    F.max(F.unix_micros(ts_col).cast("double")).alias("mx"),
-                )
-            )
-        rows = probe.collect()
-        # entity keys keep their native type via a second lookup against the
-        # narrow frame's dtypes: int-typed entities parse back from string
-        ent_is_int = dict(narrow.dtypes)[entity_col] in ("int", "bigint", "smallint", "tinyint")
+    chunked = n_chunks > 1
+    bounds = hot_bounds_us = None
+    if chunked or hot_keys:
+        # ONE collect for every plan-time bound (chunk spans + salt ranges):
+        # <= 64 entities x (hot keys + 1) rows, folded per entity and per hot key
+        us = F.unix_micros(F.col(ts_col))
+        rows = narrow.groupBy(
+            entity_col, F.when(F.col(asof_on).isin(hot_keys), F.col(asof_on))
+        ).agg(F.min(us), F.max(us)).collect()
+        bounds, hot_bounds_us = {}, {}
 
-        def _ek(s):
-            return int(s) if ent_is_int else s
+        def widen(acc, k, mn, mx):
+            lo, hi = acc.get(k, (mn, mx))
+            acc[k] = (min(lo, mn), max(hi, mx))
 
-        bounds = {_ek(r["__k"]): (r["mn"], r["mx"]) for r in rows if r["__g"] == 0}
-        if hot_keys:
-            hot_bounds_us = {
-                int(r["__k"]): (int(r["mn"]), int(r["mx"])) for r in rows if r["__g"] == 1
-            }
+        for ent, hot, mn, mx in rows:
+            if mn is not None:
+                widen(bounds, ent, mn, mx)
+                if hot is not None:
+                    widen(hot_bounds_us, hot, mn, mx)
 
     # ONE materialized order key (__ous = unix_micros(ts)) shared by both
     # window operators, and sessionize FIRST: its sort (entity, chunk, __ous,
@@ -129,14 +120,18 @@ def flagship_features(
     # __ous) ordering on the SAME attribute, so rolling's windows run with no
     # sort of their own. (Passing computed unix_micros expressions to each
     # orderBy instead plans a fresh _w0 alias per operator and every window
-    # re-sorts.)
-    if n_chunks > 1:
-        base = with_time_chunk(narrow, entity_col, ts_col, n_chunks, bounds=bounds)
-        base = base.withColumn("__ous", F.unix_micros(F.col(ts_col)))
-        base = sessionize(
-            base, entity_col, ts_col, session_gap_s, order_extra=order_extra,
-            n_chunks=n_chunks, bounds=bounds, chunk_col="__tchunk", order_col="__ous",
-        )
+    # re-sorts.) The chunked path adds the shared (entity, chunk) column.
+    base = narrow
+    chunk_kw = {}
+    if chunked:
+        base = with_time_chunk(base, entity_col, ts_col, n_chunks, bounds=bounds)
+        chunk_kw = dict(n_chunks=n_chunks, bounds=bounds, chunk_col="__tchunk")
+    base = base.withColumn("__ous", F.unix_micros(F.col(ts_col)))
+    base = sessionize(
+        base, entity_col, ts_col, session_gap_s, order_extra=order_extra,
+        **chunk_kw, order_col="__ous",
+    )
+    if chunked:
         # lazy localCheckpoint (nothing runs at plan build; materialized once
         # inside the first action, per run): rolling_count's sideband branches
         # (boundary probes + chunk tails) and the downstream dedup otherwise
@@ -149,19 +144,10 @@ def flagship_features(
         # checkpoint plan reports unknown partitioning and the (tiny) narrow
         # frame is re-exchanged — the dedup-of-computation win remains.
         base = base.localCheckpoint(eager=False)
-        base = rolling_count(
-            base, entity_col, ts_col, rolling_window_s, "rolling_docs",
-            n_chunks=n_chunks, bounds=bounds, chunk_col="__tchunk", order_col="__ous",
-        ).drop("__tchunk", "__ous")
-    else:
-        base = narrow.withColumn("__ous", F.unix_micros(F.col(ts_col)))
-        base = sessionize(
-            base, entity_col, ts_col, session_gap_s, order_extra=order_extra,
-            order_col="__ous",
-        )
-        base = rolling_count(
-            base, entity_col, ts_col, rolling_window_s, "rolling_docs", order_col="__ous"
-        ).drop("__ous")
+    base = rolling_count(
+        base, entity_col, ts_col, rolling_window_s, "rolling_docs",
+        **chunk_kw, order_col="__ous",
+    ).drop("__tchunk", "__ous")
 
     # narrow the per-feature-row payload BEFORE the explode multiplies it
     base = base.withColumn("session_id", F.col("session_id").cast("int")).withColumn(

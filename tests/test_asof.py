@@ -12,6 +12,7 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 from marmot_spark.operators.asof import asof_join, asof_join_forward, asof_join_nearest, detect_hot_keys
+from marmot_spark.operators.windows import entity_time_bounds
 
 
 def _load(spark, fixture_dir):
@@ -228,13 +229,7 @@ def test_range_salting_external_bounds(spark, fixture_dir):
     sel = ["doc_id", "seq_ts", "n_tok", "tag", "score", "matched_ts"]
     base = asof_join(seqs, labels, on="doc_id", left_ts="seq_ts", right_ts="label_ts",
                      payload=["tag", "score"], tie_break="label_seq")
-    rows = (
-        seqs.filter(F.col("doc_id").isin(hot))
-        .groupBy("doc_id")
-        .agg(F.min(F.unix_micros("seq_ts")).alias("mn"), F.max(F.unix_micros("seq_ts")).alias("mx"))
-        .collect()
-    )
-    exact = {r["doc_id"]: (r["mn"], r["mx"]) for r in rows}
+    exact = entity_time_bounds(seqs.filter(F.col("doc_id").isin(hot)), "doc_id", "seq_ts")
     loose = {k: (mn - 86_400_000_000, mx + 86_400_000_000) for k, (mn, mx) in exact.items()}
     for hb, n_salts in ((exact, 8), (loose, 8), ({}, 8), (exact, 1)):
         warns = pytest.warns(UserWarning, match="not be range-salted") if not hb else contextlib.nullcontext()

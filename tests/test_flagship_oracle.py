@@ -109,3 +109,32 @@ def test_flagship_serial_branch_accepts_ntz_ts(spark, fixture_dir, monkeypatch):
 
     monkeypatch.setattr(flagship, "flagship_features", serial_ntz)
     _assert_matches_mirror(bench.flagship_pipeline(spark, fixture_dir).toPandas(), fixture_dir)
+
+
+def test_chunked_flagship_keeps_native_key_types(spark, fixture_dir):
+    """The chunked path (n_chunks=4, every plan-time bound from one
+    aggregate) equals the serial path (n_chunks=1, no hot keys) on two key
+    shapes whose bounds must keep their native types: a string as-of key
+    with hot keys, and an int entity column that holds NULLs."""
+    from pyspark.sql import functions as F
+
+    from marmot_spark.plans.flagship import flagship_features
+
+    seqs = spark.read.parquet(f"{fixture_dir}/sequences.parquet")
+    labels = spark.read.parquet(f"{fixture_dir}/labels.parquet")
+    kw = dict(ts_col="seq_ts", asof_on="doc_id", right_ts="label_ts",
+              payload=["tag", "score"], tie_break="label_seq")
+    cases = (
+        (seqs, dict(keys=["doc_id", "source"], entity_col="source"),
+         dict(hot_keys=["d00000000", "d00000001"])),
+        (seqs.withColumn("ent", F.when(F.col("source") != "web", F.length("source"))),
+         dict(keys=["doc_id", "ent"], entity_col="ent"), {}),
+    )
+    for wide, case_kw, hot_kw in cases:
+        frames = [
+            flagship_features(wide, labels, **kw, **case_kw, **run_kw).toPandas()
+            for run_kw in (dict(n_chunks=4, **hot_kw), dict(n_chunks=1))
+        ]
+        chunked, serial = (f.sort_values(list(f.columns)).reset_index(drop=True) for f in frames)
+        assert len(serial) > 0, case_kw
+        pd.testing.assert_frame_equal(chunked, serial)

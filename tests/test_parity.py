@@ -153,7 +153,7 @@ def test_chunked_sessionize_and_rolling_match_serial(spark, fixture_dir):
     from marmot_spark.operators.windows import entity_time_bounds
 
     bounds = entity_time_bounds(seqs, "source", "seq_ts")
-    loose = {k: (mn - 10.0, mx + 250.0) for k, (mn, mx) in bounds.items()}
+    loose = {k: (mn - 10_000_000, mx + 250_000_000) for k, (mn, mx) in bounds.items()}
     for bset in [bounds, loose]:
         a = sessionize(seqs, "source", "seq_ts", 60.0, order_extra=["doc_id", "n_tok"], n_chunks=5, bounds=bset)
         sel = cols + ["session_id"]
@@ -217,6 +217,11 @@ def test_shared_chunk_col_matches_serial(spark, fixture_dir):
         "doc_id", "seq_ts", "n_tok", "source"
     )
     bounds = entity_time_bounds(seqs, "source", "seq_ts")
+    # the one bounds format: integer unix_micros min/max per entity
+    us = F.unix_micros("seq_ts")
+    want = {r["source"]: (r["mn"], r["mx"])
+            for r in seqs.groupBy("source").agg(F.min(us).alias("mn"), F.max(us).alias("mx")).collect()}
+    assert bounds == want and all(type(v) is int for mn_mx in bounds.values() for v in mn_mx)
     shared = with_time_chunk(seqs, "source", "seq_ts", 5, bounds=bounds)
     # 50_000 s is at least the chunk span: rolling falls back to the serial
     # frames on a frame that still carries the shared chunk column
@@ -258,7 +263,13 @@ def test_window_ops_require_timestamp_ts(spark):
     built instead of framing it as seconds or micros."""
     import pytest
 
-    from marmot_spark.operators.windows import rolling_count, rolling_distinct, with_time_chunk
+    from marmot_spark.operators.windows import (
+        entity_time_bounds,
+        rolling_count,
+        rolling_distinct,
+        session_features,
+        with_time_chunk,
+    )
 
     df = spark.createDataFrame([("a", 0, 1), ("a", 10, 2), ("a", 5000, 1)], "ent string, ts bigint, v int")
     ops = (
@@ -266,7 +277,9 @@ def test_window_ops_require_timestamp_ts(spark):
         lambda: rolling_count(df, "ent", "ts", 3600, "rn"),
         lambda: rolling_count(df, "ent", "ts", 3600, "rn", strategy="range"),
         lambda: rolling_distinct(df, "ent", "ts", 3600, "v"),
-        lambda: with_time_chunk(df, "ent", "ts", 4, bounds={"a": (0.0, 5000.0)}),
+        lambda: with_time_chunk(df, "ent", "ts", 4, bounds={"a": (0, 5_000_000_000)}),
+        lambda: entity_time_bounds(df, "ent", "ts"),
+        lambda: session_features(df.withColumn("session_id", F.lit(1)), "ent", "ts"),
     )
     for op in ops:
         with pytest.raises(ValueError, match="TimestampType"):
