@@ -26,6 +26,7 @@ from marmot_spark.functions.text import (
     LANG_MARKERS,
     STOPWORDS,
 )
+from marmot_spark.materialize import materialize
 from marmot_spark.operators.alignment import (
     join_alignments,
     with_aligned_token,
@@ -307,6 +308,11 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id),
   wp AS (PARTITION BY user_id ORDER BY ts, event_id
          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
 """
+
+
+def _q_w6_sessionize(spark, sf):
+    ev = sessionize(_events(spark, sf), "user_id", "ts", 1800.0, order_extra=["event_id"])
+    return ev.select("event_id", "user_id", F.unix_micros("ts").alias("ts_us"), "session_id")
 
 
 _SQL_W6 = """
@@ -708,12 +714,10 @@ def _ngram_dict_multi(spark, sf, specs) -> DataFrame:
     Per-n construction scans + tokenizes + aggregates the corpus once PER
     ORDER (w3 paid 3 full passes); here every order's grams ride a single
     Generate into one groupBy(n, ngram). The dictionary (vocabulary-sized)
-    ends in a lazy localCheckpoint: without it Catalyst pushes each
-    consumer's ``n = i`` predicate below the aggregate, the three branch
-    subtrees stop being plan-identical, and ReuseExchange cannot dedupe
-    them — each membership join would re-explode the whole corpus. The
-    checkpoint materializes the tiny dict once per run and every per-n
-    filter reads its partitions (guide §2.4/§3.3)."""
+    is materialized lazily: without the pin Catalyst pushes each consumer's
+    ``n = i`` predicate below the aggregate, the three branch subtrees stop
+    being plan-identical, and ReuseExchange cannot dedupe them — each
+    membership join would re-explode the whole corpus."""
     from marmot_spark.operators.ngrams import ngrams_col
 
     docs = _docs(spark, sf)
@@ -737,7 +741,7 @@ def _ngram_dict_multi(spark, sf, specs) -> DataFrame:
     for n, mc in specs:
         c = (F.col("n") == n) & (F.col("count") >= mc)
         keep = c if keep is None else keep | c
-    return counts.filter(keep).select("ngram", "n").localCheckpoint(eager=False)
+    return materialize(counts.filter(keep).select("ngram", "n"), eager=False)
 
 
 _GRAMS_SQL = """
@@ -3531,7 +3535,7 @@ def _q_splits_suite(spark, sf):
     ).select("doc_id", "split_time")
     cap = cap_per_group(
         _tbl(spark, sf, "documents").select("doc_id", "source"),
-        "source", 15, "doc_id", seed=5, hash_mode="portable",
+        "source", 15, "doc_id", seed=5,
     ).select("doc_id", "cap_keep")
     bud = token_budget_sample(
         _tbl(spark, sf, "documents").select("doc_id", "source", "n_chars"),

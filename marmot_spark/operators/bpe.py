@@ -23,11 +23,11 @@ Determinism: ties on count break by (a asc, b asc); new ids are
 ``new_id_base + round``. Bit-stable across partitionings because pair counts
 are exact integers.
 
-Scale notes: each round's rewrite is persisted and the previous round
-unpersisted — without this the lazy plan re-derives round k from round 0
-(O(n_merges^2) work and a plan-depth blowup). At 10^12 rows one would
-checkpoint every ~10 rounds to truncate lineage; pair counting shuffles only
-(pair, count) rows — the corpus itself never shuffles.
+Scale notes: each round's rewrite is materialized (lineage truncated — see
+marmot_spark/materialize.py) and the previous round released — without this
+the lazy plan re-derives round k from round 0 (O(n_merges^2) work and a
+plan-depth blowup). Pair counting shuffles only (pair, count) rows — the
+corpus itself never shuffles.
 """
 
 from __future__ import annotations
@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from marmot_spark.operators.iterative import gc_hint
+from marmot_spark.materialize import materialize, release
 
 
 def pair_counts(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
@@ -99,25 +99,12 @@ def train_bpe_merges(
     n_merges: int = 8,
     new_id_base: int = 1_000_000,
     min_count: int = 2,
-    checkpoint_every: int = 10,
 ) -> list[dict]:
     """Learn ``n_merges`` BPE merges; returns the ordered merge table
     [{rank, a, b, new_id, cnt}]. Stops early when no pair reaches
-    ``min_count``.
-
-    ``checkpoint_every``: every k-th round's rewrite is ``localCheckpoint``-ed
-    (eager) instead of plain-persisted, TRUNCATING the logical lineage.
-    Persist alone bounds recomputation but the plan still nests one HOF fold
-    per round — analysis/optimization cost and plan depth grow linearly, and
-    a lost executor would replay the whole chain from round 0. With
-    checkpointing, replay and plan depth are bounded at k rounds (pinned by
-    tests/test_token_pipeline.py — a 16-round run keeps the per-round plan
-    flat). For cross-job failure recovery on a real cluster, set a reliable
-    ``spark.sparkContext.setCheckpointDir`` and swap ``localCheckpoint`` for
-    ``checkpoint``; local mode has no durable store, so the executor-local
-    form is the sandbox-honest default. 0 disables."""
-    cur = df.select(F.col(tokens_col).alias("__t")).persist()
-    cur.count()  # materialize before the loop
+    ``min_count``. Each round's rewrite is materialized (one job per round),
+    so plan depth and replay stay one round deep."""
+    cur = materialize(df.select(F.col(tokens_col).alias("__t")))
     merges: list[dict] = []
     try:
         for rank in range(n_merges):
@@ -132,17 +119,11 @@ def train_bpe_merges(
             a, b, cnt = int(top[0]["a"]), int(top[0]["b"]), int(top[0]["cnt"])
             new_id = new_id_base + rank
             merges.append({"rank": rank, "a": a, "b": b, "new_id": new_id, "cnt": cnt})
-            nxt = cur.select(apply_merge(F.col("__t"), a, b, new_id).alias("__t"))
-            if checkpoint_every and (rank + 1) % checkpoint_every == 0:
-                nxt = nxt.localCheckpoint(eager=True)  # materializes + truncates lineage
-                gc_hint(nxt)  # see graph.py: reclaim superseded checkpoint copies
-            else:
-                nxt = nxt.persist()
-                nxt.count()  # materialize so unpersisting cur is safe
-            cur.unpersist()
+            nxt = materialize(cur.select(apply_merge(F.col("__t"), a, b, new_id).alias("__t")))
+            release(cur)
             cur = nxt
     finally:
-        cur.unpersist()
+        release(cur)
     return merges
 
 

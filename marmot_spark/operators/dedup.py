@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from marmot_spark.materialize import materialize
+
 P31 = 2_147_483_647  # Mersenne prime 2^31-1
 MULT = 2_654_435_761
 
@@ -93,15 +95,8 @@ def _sig_frame(
         F.collect_set("s").alias("sh"),
         *[F.min(_hash_k(F.col("s"), k)).alias(f"mh_{k}") for k in range(n_hashes)],
     )
-    # Every caller consumes the signature frame several times (band keys,
-    # verify-side sh_a, verify-side sh_b): as a plain plan those consumers
-    # each re-run the scan + shingle fold + explode + aggregation (the static
-    # plan duplicated this subtree 4x in minhash_lsh_pairs). A lazy
-    # localCheckpoint materializes the signatures ONCE inside the first
-    # action (persisted per run — nothing survives across runs) and every
-    # consumer reads the stored partitions (guide §3.3/§5: materialise a
-    # reused intermediate instead of recomputing wide subtrees).
-    return sig.localCheckpoint(eager=False)
+    # read by every band/verify consumer: computed once per run
+    return materialize(sig, eager=False)
 
 
 def _band_frame(sig: DataFrame, n_hashes: int, rows_per_band: int, n_bands: int) -> DataFrame:
@@ -135,8 +130,7 @@ def minhash_lsh_pairs(
     bands = _band_frame(sig, n_hashes, rows_per_band, n_bands)
 
     # guardrail: drop degenerate hot buckets before the self-join explodes
-    wcnt = Window.partitionBy("band", "bh")
-    bands = bands.withColumn("__bsz", F.count(F.lit(1)).over(wcnt)).filter(F.col("__bsz") <= max_bucket).drop("__bsz")
+    bands = _capped(bands, max_bucket)
 
     # candidate ids only — the shingle arrays join in once per surviving pair
     a = bands.select(F.col("id").alias("id_a"), "band", "bh")

@@ -35,6 +35,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from marmot_spark.functions.splits import split_hash_col
+
 __all__ = [
     "target_encode_past",
     "decay_features",
@@ -233,7 +235,6 @@ def cap_per_group(
     *,
     seed: int = 0,
     out_col: str = "cap_keep",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Deterministic per-group cap: keep at most ``k`` rows per group.
 
@@ -244,10 +245,9 @@ def cap_per_group(
     with rank > k get ``{out_col} = false``. Tie-break on the id itself
     makes the rank total even under hash collisions.
 
-    ``hash_mode="xxhash64"`` (default) ranks by the JVM-native 64-bit hash;
-    ``"portable"`` ranks by the engine's cross-engine string-fold hash
-    (functions/splits.py::split_hash_col — 10k buckets, heavier tie-break
-    traffic but exactly mirrorable in DuckDB SQL for oracle pairing).
+    The rank hash is the engine's cross-engine string-fold hash
+    (functions/splits.py::split_hash_col — 10k buckets, ties broken by the
+    id), exactly mirrorable in DuckDB SQL for oracle pairing.
 
     Scale: one Exchange on ``group`` + one WindowExec; for groups at web
     cardinality (1e8 domains) the window is the right plan — no group is
@@ -257,13 +257,6 @@ def cap_per_group(
     if k < 1:
         raise ValueError("k must be >= 1")
     groups = [group] if isinstance(group, str) else list(group)
-    if hash_mode == "xxhash64":
-        h = F.xxhash64(F.col(id_col), F.lit(int(seed)))
-    elif hash_mode == "portable":
-        from marmot_spark.functions.splits import split_hash_col
-
-        h = split_hash_col(id_col, seed=seed)
-    else:
-        raise ValueError(f"unknown hash_mode {hash_mode!r}")
+    h = split_hash_col(id_col, seed=seed)
     w = Window.partitionBy(*groups).orderBy(h.asc(), F.col(id_col).asc())
     return df.withColumn(out_col, F.row_number().over(w) <= F.lit(int(k)))

@@ -22,9 +22,8 @@ adversarial LONG-CHAIN graphs (quote-chains do occur in web dedup) pass
 ``mode="star"``: the alternating large-star/small-star algorithm (Kiveris
 et al., "Connected Components in MapReduce and Beyond", SoCC 2014),
 O(log^2 n) rounds regardless of diameter, same output contract. Both modes
-truncate lineage every ``checkpoint_every`` rounds (localCheckpoint) so the
-plan does not deepen with iteration count — same treatment as
-operators/bpe.py.
+materialize every round (marmot_spark/materialize.py) so the plan does not
+deepen with iteration count — same treatment as operators/bpe.py.
 """
 
 from __future__ import annotations
@@ -32,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from marmot_spark.operators.iterative import gc_hint
+from marmot_spark.materialize import materialize, release
 
 
 def connected_components(
@@ -40,7 +39,6 @@ def connected_components(
     src: str,
     dst: str,
     max_iter: int = 30,
-    checkpoint_every: int = 5,
     mode: str = "min_label",
 ) -> DataFrame:
     """Label every node of the undirected graph with its component's MIN node
@@ -57,42 +55,28 @@ def connected_components(
     a silent early stop would mislabel components.
     """
     if mode == "star":
-        return _connected_components_star(edges, src, dst, max_iter, checkpoint_every)
+        return _connected_components_star(edges, src, dst, max_iter)
     if mode != "min_label":
         raise ValueError(f"unknown mode {mode!r}: expected 'min_label' or 'star'")
-    und = (
+    und = materialize(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
     )
-    labels = und.select(F.col("a").alias("id")).distinct().select(
+    labels = materialize(und.select(F.col("a").alias("id")).distinct().select(
         "id", F.col("id").alias("comp")
-    ).persist()
-    labels.count()
+    ))
     try:
-        for it in range(max_iter):
+        for _ in range(max_iter):
             prop = und.join(labels.withColumnRenamed("id", "a"), "a").select(
                 F.col("b").alias("id"), "comp"
             )
-            new = (
+            new = materialize(
                 labels.unionByName(prop)
                 .groupBy("id")
                 .agg(F.min("comp").alias("comp"))
             )
-            if checkpoint_every and (it + 1) % checkpoint_every == 0:
-                new = new.localCheckpoint(eager=True)
-                # DataFrame.unpersist is a no-op on a checkpointed frame's
-                # internal RDD; dropping the python ref alone leaves each
-                # full label-set copy in the block manager until the
-                # ContextCleaner's next periodic GC. A driver-side GC hint at
-                # checkpoint boundaries (every k rounds, not per round) lets
-                # the cleaner reclaim the previous copies promptly.
-                gc_hint(new)
-            else:
-                new = new.persist()
-                new.count()
             # convergence probe: min-label only ever DECREASES, so one changed
             # row existing is the exact "not yet fixpoint" predicate; limit(1)
             # stops the scan at the first hit
@@ -102,7 +86,7 @@ def connected_components(
                 .limit(1)
                 .count()
             )
-            labels.unpersist()
+            release(labels)
             labels = new
             if changed == 0:
                 return labels
@@ -110,8 +94,11 @@ def connected_components(
             f"connected_components did not converge in {max_iter} rounds — "
             "graph diameter exceeds max_iter (use mode='star' for chain graphs)"
         )
+    except BaseException:
+        release(labels)
+        raise
     finally:
-        und.unpersist()
+        release(und)
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -154,7 +141,6 @@ def _connected_components_star(
     src: str,
     dst: str,
     max_iter: int,
-    checkpoint_every: int,
 ) -> DataFrame:
     """Alternating large-star/small-star connected components — O(log^2 n)
     rounds independent of diameter (the chain-graph escape hatch). Same
@@ -165,39 +151,35 @@ def _connected_components_star(
     Convergence = the small-star output is a fixpoint (set-equal to the
     previous round's edges): at that point the graph is a disjoint union of
     stars rooted at each component's minimum. The fixpoint probe costs one
-    extra action per round: set equality = |new| == |cur| (the counts ride
-    the persist materialization) AND new \\ cur empty (one anti-join
-    ``limit(1)`` — equal-size sets with no new element are identical).
+    extra action per round: set equality = |new| == |cur| AND new \\ cur
+    empty (one anti-join ``limit(1)`` — equal-size sets with no new element
+    are identical). Each star pass reads its input several times
+    (symmetrize union + groupBy-join back), so an unmaterialized round plan
+    grows ~5x per round (Catalyst analysis measured 11s -> 21s -> >500s by
+    round 3 on a 40-node chain).
+
+    The returned frame reads the materialized node inventory and final edge
+    set, so neither is released.
     """
-    cur = (
+    cur = materialize(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
     )
     # node inventory up front: star rounds contract edges, and a component
     # reduced to its root alone must still be labeled
-    nodes = (
+    nodes = materialize(
         cur.select(F.col("a").alias("id"))
         .unionByName(cur.select(F.col("b").alias("id")))
         .distinct()
-        .persist()
     )
-    nodes.count()
-    prev_n = cur.count()
     try:
-        for it in range(max_iter):
-            # lineage MUST truncate every round here (not every
-            # checkpoint_every like min-label): each star pass references its
-            # input several times (symmetrize union + groupBy-join back), so
-            # the logical plan grows ~5x per round and Catalyst analysis time
-            # goes exponential by round 3 (measured 11s -> 21s -> >500s on a
-            # 40-node chain). localCheckpoint pins the edge set instead.
-            new = _small_star(_large_star(cur)).localCheckpoint(eager=True)
-            gc_hint(new)
+        prev_n = cur.count()
+        for _ in range(max_iter):
+            new = materialize(_small_star(_large_star(cur)))
             n = new.count()
             grew = n != prev_n or new.join(cur, ["a", "b"], "left_anti").limit(1).count()
-            cur.unpersist()
+            release(cur)
             cur, prev_n = new, n
             if not grew:
                 stars = cur.select(F.col("a").alias("id"), F.col("b").alias("comp"))
@@ -209,8 +191,10 @@ def _connected_components_star(
             f"connected_components(mode='star') did not converge in {max_iter} "
             "rounds — expected O(log^2 n); check for pathological input"
         )
-    finally:
-        nodes.unpersist()
+    except BaseException:
+        release(cur)
+        release(nodes)
+        raise
 
 
 def keep_best(

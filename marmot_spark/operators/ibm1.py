@@ -20,12 +20,11 @@ Spark shape (the same iterative-aggregation family as BPE/k-means):
   M step  expected counts groupBy (e, f), then per-e normalization via a
           vocab-sized groupBy (e) joined back — t_{k+1}.
 
-  Each iteration's t-table is localCheckpoint-ed (lineage TRUNCATED, not
-  just cached: the round plan consumes `scored` twice, so plain persist
-  still nests a doubling plan tree — measured exponential per-round cost
-  before the checkpoint, flat after); float probabilities mean parity with
-  a reference is allclose-class, not hash-exact — exactly the contract the
-  north rule names for feature values.
+  The pair stream and each iteration's t-table are ``materialize``-d
+  (lineage truncated — see marmot_spark/materialize.py) and the superseded
+  round is released; float probabilities mean parity with a reference is
+  allclose-class, not hash-exact — exactly the contract the north rule
+  names for feature values.
 
 Initialization: uniform over each e's co-occurring f set (standard
 practical IBM-1 with co-occurrence-restricted support). NULL alignment is
@@ -37,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from marmot_spark.materialize import materialize, release
 
 NULL_ID = -1
 
@@ -163,18 +164,16 @@ def train_ibm1(
     """
     keyed = _stable_keyed(df, src_col, tgt_col, id_col)
     base = keyed.filter((F.size(src_col) > 0) & (F.size(tgt_col) > 0))
-    pairs = _sentence_pairs(
+    pairs = materialize(_sentence_pairs(
         base, src_col, tgt_col, include_null, diagonal_lambda, p_null
-    ).persist()
-    pairs.count()
+    ))
 
     # t_0: uniform over each e's co-occurring f support
     support = pairs.select("e", "f").distinct()
     fanout = support.groupBy("e").agg(F.count(F.lit(1)).alias("__n"))
-    t = support.join(fanout, "e").select(
+    t = materialize(support.join(fanout, "e").select(
         "e", "f", (F.lit(1.0) / F.col("__n")).alias("t")
-    ).persist()
-    t.count()
+    ))
 
     try:
         for _ in range(n_iter):
@@ -185,19 +184,17 @@ def train_ibm1(
             )
             counts = posterior.groupBy("e", "f").agg(F.sum("__c").alias("__cnt"))
             totals = counts.groupBy("e").agg(F.sum("__cnt").alias("__tot"))
-            # localCheckpoint, not persist: the EM plan references `scored`
-            # twice per round, so plain caching still nests a doubling plan
-            # tree (measured: 9s -> 33s -> 428s per added round — exponential
-            # analysis/recompute). Checkpointing the vocabulary-small t-table
-            # truncates lineage every round; per-round cost becomes flat.
-            t_new = counts.join(totals, "e").select(
+            t_new = materialize(counts.join(totals, "e").select(
                 "e", "f", (F.col("__cnt") / F.col("__tot")).alias("t")
-            ).localCheckpoint(eager=True)
-            t.unpersist()
+            ))
+            release(t)
             t = t_new
         return t
+    except BaseException:
+        release(t)
+        raise
     finally:
-        pairs.unpersist()
+        release(pairs)
 
 
 def _pairs_with_h(
@@ -206,7 +203,7 @@ def _pairs_with_h(
     """Like ``_sentence_pairs`` but carrying the LAMBDA-INDEPENDENT parts of
     the diagonal prior instead of a baked weight: ``h`` = |i/n - j/m| (0 on
     the NULL row), ``__isnull``, and the (n, m, j) shape columns the tension
-    M step groups on. Persisting THIS stream lets the prior weight be
+    M step groups on. Materializing THIS stream lets the prior weight be
     re-derived each EM round as a narrow column from the current lambda —
     the pair fan-out is paid once even though lambda moves."""
     src = F.col(src_col)
@@ -310,21 +307,19 @@ def train_fast_align(
     not corpus-bounded — then a guarded driver collect (raises above
     ``max_shape_rows`` distinct shapes; web-scale MT corpora have <= a few
     thousand distinct (n, m) under standard length caps). The pair fan-out
-    is persisted WITHOUT the prior baked in (``_pairs_with_h``), so the
+    is materialized WITHOUT the prior baked in (``_pairs_with_h``), so the
     moving lambda re-enters each round as a narrow codegen column — zero
     extra shuffles versus the fixed-lambda trainer.
     """
     keyed = _stable_keyed(df, src_col, tgt_col, id_col)
     base = keyed.filter((F.size(src_col) > 0) & (F.size(tgt_col) > 0))
-    pairs = _pairs_with_h(base, src_col, tgt_col, include_null).persist()
-    pairs.count()
+    pairs = materialize(_pairs_with_h(base, src_col, tgt_col, include_null))
 
     support = pairs.select("e", "f").distinct()
     fanout = support.groupBy("e").agg(F.count(F.lit(1)).alias("__n"))
-    t = support.join(fanout, "e").select(
+    t = materialize(support.join(fanout, "e").select(
         "e", "f", (F.lit(1.0) / F.col("__n")).alias("t")
-    ).persist()
-    t.count()
+    ))
 
     lam = float(lambda_init)
     try:
@@ -337,35 +332,39 @@ def train_fast_align(
                 w = F.exp(-F.lit(lam) * F.col("h"))
             scored = pairs.join(t, ["e", "f"]).withColumn("__s", w * F.col("t"))
             denom = scored.groupBy("__sent", "f_pos").agg(F.sum("__s").alias("__z"))
-            posterior = scored.join(denom, ["__sent", "f_pos"]).select(
+            posterior = materialize(scored.join(denom, ["__sent", "f_pos"]).select(
                 "e", "f", "__le", "__lf", "f_pos", "h", "__isnull",
                 (F.col("__s") / F.col("__z")).alias("__c"),
-            )
-            # localCheckpoint for the same doubling-plan reason as train_ibm1
-            posterior = posterior.localCheckpoint(eager=True)
-            counts = posterior.groupBy("e", "f").agg(F.sum("__c").alias("__cnt"))
-            totals = counts.groupBy("e").agg(F.sum("__cnt").alias("__tot"))
-            t_new = counts.join(totals, "e").select(
-                "e", "f", (F.col("__cnt") / F.col("__tot")).alias("t")
-            ).localCheckpoint(eager=True)
-            stats = (
-                posterior.filter(~F.col("__isnull"))
-                .groupBy("__le", "__lf", "f_pos")
-                .agg(F.sum("__c").alias("wgt"), F.sum(F.col("__c") * F.col("h")).alias("gh"))
-            )
-            rows = [r.asDict() for r in stats.limit(max_shape_rows + 1).collect()]
-            if len(rows) > max_shape_rows:
-                raise ValueError(
-                    f"> {max_shape_rows} distinct (n, m, j) sentence shapes; cap "
-                    "sentence lengths upstream or raise max_shape_rows (the "
-                    "tension M step collects shape-bounded statistics)"
+            ))
+            try:
+                stats = (
+                    posterior.filter(~F.col("__isnull"))
+                    .groupBy("__le", "__lf", "f_pos")
+                    .agg(F.sum("__c").alias("wgt"), F.sum(F.col("__c") * F.col("h")).alias("gh"))
                 )
+                rows = [r.asDict() for r in stats.limit(max_shape_rows + 1).collect()]
+                if len(rows) > max_shape_rows:
+                    raise ValueError(
+                        f"> {max_shape_rows} distinct (n, m, j) sentence shapes; cap "
+                        "sentence lengths upstream or raise max_shape_rows (the "
+                        "tension M step collects shape-bounded statistics)"
+                    )
+                counts = posterior.groupBy("e", "f").agg(F.sum("__c").alias("__cnt"))
+                totals = counts.groupBy("e").agg(F.sum("__cnt").alias("__tot"))
+                t_new = materialize(counts.join(totals, "e").select(
+                    "e", "f", (F.col("__cnt") / F.col("__tot")).alias("t")
+                ))
+            finally:
+                release(posterior)
             lam = _solve_lambda(rows, target=sum(r["gh"] for r in rows))
-            t.unpersist()
+            release(t)
             t = t_new
         return t, lam
+    except BaseException:
+        release(t)
+        raise
     finally:
-        pairs.unpersist()
+        release(pairs)
 
 
 def viterbi_align(

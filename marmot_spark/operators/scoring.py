@@ -360,12 +360,13 @@ def nb_logodds(
     quantized to 1/``quant`` units BEFORE the per-doc sum (the module-wide
     numeric contract), so the returned score is an exact BIGINT sum.
 
-    Plan: one corpus-sized (doc, tok) explode consumed by both the count
-    aggregation and the scoring join; class totals + vocabulary size as a
-    1-row broadcast crossJoin; the vocabulary-sized weight table joins back
-    under ``_maybe_broadcast`` (broadcast under the ceiling, shuffle-hash
-    above — a 10^7-entry web vocabulary must not be an unconditional driver
-    broadcast); per-doc sum groups by doc id. No driver collect anywhere.
+    Plan: ``nb_fit`` on ``df`` then ``nb_score`` of ``df`` itself — the
+    (doc, tok) explode feeds the count aggregation and the scoring join;
+    class totals + vocabulary size as a 1-row broadcast crossJoin; the
+    vocabulary-sized weight table joins back under ``_maybe_broadcast``
+    (broadcast under the ceiling, shuffle-hash above — a 10^7-entry web
+    vocabulary must not be an unconditional driver broadcast); per-doc sum
+    groups by doc id. No driver collect anywhere.
 
     Returns (doc_col, nb_toks, nb_logodds_q, nb_keep) — nb_keep is the
     decision ``log-odds > 0``. Docs with zero tokens drop out (no evidence);
@@ -375,50 +376,9 @@ def nb_logodds(
     the actual CCNet/GPT-3 deployment shape), use ``nb_fit`` + ``nb_score``,
     which carry the explicit OOV weight.
     """
-    sp = df.select(
-        F.col(doc_col).alias("__doc"),
-        pos_pred.alias("__y"),
-        F.explode(tokens_col).alias("tok"),
-    )
-    cc = sp.groupBy("tok").agg(
-        F.sum(F.when(F.col("__y"), 1).otherwise(0)).alias("cp"),
-        F.sum(F.when(F.col("__y"), 0).otherwise(1)).alias("cn"),
-    )
-    tot = cc.agg(
-        F.sum("cp").alias("__np"),
-        F.sum("cn").alias("__nn"),
-        F.count(F.lit(1)).alias("__v"),
-    )
-    a = F.lit(float(alpha))
-    av = a * F.col("__v").cast("double")
-    w = cc.crossJoin(F.broadcast(tot)).select(
-        "tok",
-        _quant(
-            F.log((F.col("cp").cast("double") + a) / (F.col("__np").cast("double") + av))
-            - F.log((F.col("cn").cast("double") + a) / (F.col("__nn").cast("double") + av)),
-            quant,
-        ).alias("__w"),
-    )
-    prior = df.agg(
-        _quant(
-            F.log(
-                (F.sum(F.when(pos_pred, 1).otherwise(0)).cast("double") + F.lit(1.0))
-                / (F.sum(F.when(pos_pred, 0).otherwise(1)).cast("double") + F.lit(1.0))
-            ),
-            quant,
-        ).alias("__prior")
-    )
-    return (
-        sp.join(_maybe_broadcast(w, broadcast_max_rows), "tok")
-        .groupBy("__doc")
-        .agg(F.count(F.lit(1)).alias("nb_toks"), F.sum("__w").alias("__sw"))
-        .crossJoin(F.broadcast(prior))
-        .select(
-            F.col("__doc").alias(doc_col),
-            F.col("nb_toks").cast("long").alias("nb_toks"),
-            (F.col("__prior") + F.col("__sw")).cast("long").alias("nb_logodds_q"),
-            ((F.col("__prior") + F.col("__sw")) > 0).alias("nb_keep"),
-        )
+    return nb_score(
+        df, *nb_fit(df, pos_pred, tokens_col, alpha, quant), doc_col, tokens_col,
+        broadcast_max_rows,
     )
 
 
@@ -496,27 +456,37 @@ def nb_score(
     broadcast_max_rows: int = BROADCAST_MAX_ROWS,
 ) -> DataFrame:
     """Apply an ``nb_fit`` model to ANY corpus — out-of-vocabulary tokens
-    take the model's smoothed OOV weight (left join + coalesce), so a raw
+    take the model's smoothed OOV weight (left join + OOV count), so a raw
     web crawl full of tokens the clean reference never saw still scores on
     the same scale. Returns the ``nb_logodds`` schema
     (doc_col, nb_toks, nb_logodds_q, nb_keep); scoring the training corpus
-    itself reproduces ``nb_logodds`` exactly (no OOV hits the coalesce).
+    itself reproduces ``nb_logodds`` exactly (no token is OOV).
 
     Plan: one (doc, tok) explode, LEFT join against the weight table under
     the conditional-broadcast ceiling (shuffle-hash above it), per-doc sum
-    keyed by doc id, model constants as a 1-row broadcast crossJoin.
+    of the known weights and count of OOV tokens keyed by doc id, then the
+    model constants as a 1-row broadcast crossJoin on the doc-sized result
+    (sum of OOV weights = oov_w_q * OOV count, exact in BIGINT).
     """
     sp = df.select(F.col(doc_col).alias("__doc"), F.explode(tokens_col).alias("tok"))
+    score = (
+        F.col("prior_q")
+        + F.coalesce(F.col("__sw"), F.lit(0))
+        + F.col("oov_w_q") * F.col("__n_oov")
+    )
     return (
         sp.join(_maybe_broadcast(weights, broadcast_max_rows), "tok", "left")
+        .groupBy("__doc")
+        .agg(
+            F.count(F.lit(1)).alias("nb_toks"),
+            F.sum("w_q").alias("__sw"),
+            F.count_if(F.col("w_q").isNull()).alias("__n_oov"),
+        )
         .crossJoin(F.broadcast(consts))
-        .select("__doc", F.coalesce(F.col("w_q"), F.col("oov_w_q")).alias("__w"), "prior_q")
-        .groupBy("__doc", "prior_q")
-        .agg(F.count(F.lit(1)).alias("nb_toks"), F.sum("__w").alias("__sw"))
         .select(
             F.col("__doc").alias(doc_col),
             F.col("nb_toks").cast("long").alias("nb_toks"),
-            (F.col("prior_q") + F.col("__sw")).cast("long").alias("nb_logodds_q"),
-            ((F.col("prior_q") + F.col("__sw")) > 0).alias("nb_keep"),
+            score.cast("long").alias("nb_logodds_q"),
+            (score > 0).alias("nb_keep"),
         )
     )

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from marmot_spark.materialize import materialize, release
+
 P31 = 2_147_483_647
 MULT = 2_654_435_761
 QUANT = 1000
@@ -173,8 +175,9 @@ def kmeans_codebook(
     embedding width, so 768–4096-dim vectors cost rows (cheap, distributed),
     not thousands of Catalyst aggregate expressions (codegen/plan blowup).
     The driver collects n_cells x dim (cell, dim, sum) rows — e.g. 8x4096 =
-    32k longs. The assigned frame is persisted for the iteration so the
-    meta pass (counts + reseed donors) and the sum pass share one compute.
+    32k longs. The assigned frame is materialized (lazily) for the iteration
+    so the meta pass (counts + reseed donors) and the sum pass share one
+    compute, and released after the sum pass.
     """
     q = corpus.select(F.col(id_col).alias("__id"), quantized_col(emb_col).alias("__q"))
     dim = int(q.select(F.size("__q")).limit(1).collect()[0][0])
@@ -195,13 +198,14 @@ def kmeans_codebook(
         cdf = spark.createDataFrame(
             [(c, v) for c, v in cents], schema="cell long, qcent array<long>"
         )
-        assigned = (
+        assigned = materialize(
             q.join(F.broadcast(cdf))
             .withColumn("__s", int_dot(F.col("__q"), F.col("qcent")))
             .groupBy("__id")
             .agg(F.max_by("cell", F.struct(F.col("__s"), -F.col("cell"))).alias("cell"),
-                 F.first("__q").alias("__q"))
-        ).persist()
+                 F.first("__q").alias("__q")),
+            eager=False,
+        )
         try:
             # per cell: count and the member FARTHEST from its own centroid
             # (min dot, tie by id) — the deterministic reseed donor for dead
@@ -225,7 +229,7 @@ def kmeans_codebook(
                 .collect()
             )
         finally:
-            assigned.unpersist()
+            release(assigned)
         sums_by_cell: dict[int, list] = {}
         for r in dsums:
             sums_by_cell.setdefault(int(r["cell"]), [0] * dim)[int(r["d"])] = int(r["s"])

@@ -43,6 +43,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from marmot_spark.materialize import materialize
 from marmot_spark.operators.asof import asof_join
 from marmot_spark.operators.windows import (
     explode_with_context,
@@ -132,18 +133,14 @@ def flagship_features(
         **chunk_kw, order_col="__ous",
     )
     if chunked:
-        # lazy localCheckpoint (nothing runs at plan build; materialized once
-        # inside the first action, per run): rolling_count's sideband branches
-        # (boundary probes + chunk tails) and the downstream dedup otherwise
-        # re-execute the sessionized subtree per consumer — the same device
-        # (and rationale) as the minhash _sig_frame / w3 dictionary
-        # checkpoints. Under the bench flagship regime (AQE off) the
-        # LogicalRDD keeps the (entity, chunk) partitioning AND the
-        # (entity, chunk, __ous, ties) sort order, so rolling runs with no
-        # exchange and no sort of its own; with AQE on the unexecuted
-        # checkpoint plan reports unknown partitioning and the (tiny) narrow
-        # frame is re-exchanged — the dedup-of-computation win remains.
-        base = base.localCheckpoint(eager=False)
+        # rolling_count's sideband branches (boundary probes + chunk tails)
+        # and the downstream dedup each read the sessionized frame. Under
+        # the bench flagship regime (AQE off) the pinned frame keeps the
+        # (entity, chunk) partitioning AND the (entity, chunk, __ous, ties)
+        # sort order, so rolling runs with no exchange and no sort of its
+        # own; with AQE on the unexecuted pin reports unknown partitioning
+        # and the (tiny) narrow frame is re-exchanged.
+        base = materialize(base, eager=False)
     base = rolling_count(
         base, entity_col, ts_col, rolling_window_s, "rolling_docs",
         **chunk_kw, order_col="__ous",

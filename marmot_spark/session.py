@@ -27,10 +27,6 @@ def build_session(
         os.environ["PYTHONPATH"] = f"{pkg_root}{os.pathsep}{pp}" if pp else pkg_root
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     if shuffle_partitions is None:
-        # partitions per core: standard cluster practice is 2-3x total cores
-        # (tail-balance: with partitions == cores, one slow task idles the
-        # rest of the wave); SPARK_GRAFT_SHUFFLE_PER_CORE tunes it
-        mult = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PER_CORE", "1"))
         inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
         if "," in inner:
             # local-cluster[numWorkers, coresPerWorker, memMB]
@@ -40,7 +36,7 @@ def build_session(
             n = os.cpu_count() or 32
         else:
             n = int(inner)
-        shuffle_partitions = max(2, n * mult)
+        shuffle_partitions = max(2, n)
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
