@@ -43,6 +43,13 @@ as-of result is unchanged, only the parallelism changes, and replication is
 O(n_salts) rows per hot key (skew-aware repartitioning in the spirit of DS2,
 PAPERS.md). Non-hot keys use salt=0. Salting needs a single join key and
 TimestampType timestamps.
+
+The whole default (``strategy="window"``) join stays in the JVM, salting
+included: the (hot key x chunk boundary) relation the carries need is a
+literal relation built from Column expressions, never a Python-list
+``createDataFrame`` (classic PySpark ships such a list through a PythonRDD,
+so every run would fork Python workers for a few dozen rows; see
+``_boundary_carries``).
 """
 
 from __future__ import annotations
@@ -179,31 +186,35 @@ def asof_join(
     tie_l = F.lit(0).cast("long")  # left rows sort AFTER right rows at equal ts via _SIDE
     tie_r = F.col(tie_break).cast("long") if tie_break else F.lit(0).cast("long")
 
-    lhs = left.withColumn(_SALT, l_salt).withColumn(_SIDE, F.lit(1)).withColumn(_TS, F.col(left_ts)).withColumn(_TIE, tie_l)
-    for c in payload:
-        lhs = lhs.withColumn(c, F.lit(None).cast(dict(right.dtypes)[c]))
-    lhs = lhs.withColumn(_MATCH_TS, F.lit(None).cast(dict(right.dtypes)[right_ts]))
+    # each union side is ONE projection in union_cols order: every withColumn
+    # builds and analyzes a new Dataset at plan-build time
+    ltypes, rtypes = dict(left.dtypes), dict(right.dtypes)
 
-    rhs = right.select(keys + [right_ts] + list(payload) + ([tie_break] if tie_break else []))
-    rhs = (
-        rhs.withColumn(_SALT, r_salt)
-        .withColumn(_SIDE, F.lit(0))
-        .withColumn(_TS, F.col(right_ts))
-        .withColumn(_TIE, tie_r)
-        .withColumn(_MATCH_TS, F.col(right_ts))
-    )
-    for c in left_cols:
-        if c not in rhs.columns:
-            rhs = rhs.withColumn(c, F.lit(None).cast(dict(left.dtypes)[c]))
+    def null_of(c, dtype):
+        return F.lit(None).cast(dtype).alias(c)
+
     union_cols = left_cols + list(payload) + [_SALT, _SIDE, _TS, _TIE, _MATCH_TS]
-    merged = lhs.select(union_cols).unionByName(rhs.select(union_cols))
+    lhs = left.select(
+        *left_cols,
+        *[null_of(c, rtypes[c]) for c in payload],
+        l_salt.alias(_SALT), F.lit(1).alias(_SIDE), F.col(left_ts).alias(_TS),
+        tie_l.alias(_TIE), null_of(_MATCH_TS, rtypes[right_ts]),
+    )
+    # the right side carries its own key / ts / payload / tie columns; any
+    # other left column is NULL on right rows
+    r_own = set(keys + [right_ts] + list(payload) + ([tie_break] if tie_break else []))
+    rhs = right.select(
+        *[F.col(c) if c in r_own else null_of(c, ltypes[c]) for c in left_cols],
+        *payload,
+        r_salt.alias(_SALT), F.lit(0).alias(_SIDE), F.col(right_ts).alias(_TS),
+        tie_r.alias(_TIE), F.col(right_ts).alias(_MATCH_TS),
+    )
+    merged = lhs.unionByName(rhs)
     if carry_rhs is not None:
-        for c in union_cols:
-            if c not in carry_rhs.columns:
-                carry_rhs = carry_rhs.withColumn(
-                    c, F.lit(None).cast(dict(merged.dtypes)[c])
-                )
-        merged = merged.unionByName(carry_rhs.select(union_cols))
+        mtypes, c_own = dict(merged.dtypes), set(carry_rhs.columns)
+        merged = merged.unionByName(carry_rhs.select(
+            *[F.col(c) if c in c_own else null_of(c, mtypes[c]) for c in union_cols]
+        ))
 
     if strategy == "window":
         w = (
@@ -221,22 +232,25 @@ def asof_join(
             F.col(_SIDE) == 0, F.struct(*[F.col(c).alias(c) for c in fill])
         )
         out = merged.withColumn("__asof_pack", F.last(pack, ignorenulls=True).over(w))
-        out = out.filter(F.col(_SIDE) == 1)
-        for c in fill:
-            out = out.withColumn(c, F.col("__asof_pack").getField(c))
-        out = out.drop("__asof_pack")
+        out = out.filter(F.col(_SIDE) == 1).select(*[
+            F.col("__asof_pack").getField(c).alias(c) if c in fill else F.col(c)
+            for c in union_cols
+        ])
     elif strategy == "merge":
         out = _merge_kernel(merged, keys, payload)
     else:
         raise ValueError(f"unknown strategy {strategy!r}")
 
-    if tolerance_us is not None:
+    def fresh(c):
+        # a match older than left_ts - tolerance_us is no match
+        if tolerance_us is None:
+            return F.col(c)
         stale = F.col(_MATCH_TS) < F.col(_TS) - F.expr(f"INTERVAL {tolerance_us} MICROSECOND")
-        for c in payload:
-            out = out.withColumn(c, F.when(stale, F.lit(None)).otherwise(F.col(c)))
-        out = out.withColumn(_MATCH_TS, F.when(stale, F.lit(None)).otherwise(F.col(_MATCH_TS)))
+        return F.when(stale, F.lit(None)).otherwise(F.col(c))
 
-    return out.select(left_cols + list(payload) + [F.col(_MATCH_TS).alias("matched_ts")])
+    return out.select(
+        *left_cols, *[fresh(c).alias(c) for c in payload], fresh(_MATCH_TS).alias("matched_ts")
+    )
 
 
 def _boundary_carries(
@@ -260,14 +274,29 @@ def _boundary_carries(
     ``max_by`` aggregation — 2 stages, map-side partial agg, no sort. Same
     result: per (key, boundary) the row with max (ts, tie) among rows
     strictly before the boundary.
+
+    The boundary relation (<= hot keys x (n_salts - 1) rows; ``detect_hot_keys``
+    caps hot keys at 1/threshold) is a JVM literal relation, ``inline`` of an
+    array of literal structs over a one-row range, with the key cast to the
+    right side's key type. A Python-list ``createDataFrame`` of the same rows
+    reads through a PythonRDD, one extra 4-task stage per run that forks
+    Python workers: after 3 flagship runs (30 boundary rows each) the
+    driver's process tree held 5 ``pyspark.daemon`` processes of ~62 MB
+    resident each (4-vCPU host, ``local[4]``), and the flagship benchmark's
+    peak RSS read 1602 MB against 1266 MB with the literal relation (medians
+    of 12 runs each); with the literal relation the tree holds none.
     """
     spans = _spans_us(hot_bounds_us, n_salts)
+    key_type = dict(right.dtypes)[key]
     # integer micros: <= boundary-1us == strictly < boundary
-    brows = [(k, c, mnus + c * spans[k] - 1) for k, (mnus, _) in hot_bounds_us.items() for c in range(1, n_salts)]
+    brows = [
+        F.struct(F.lit(k).cast(key_type).alias(key), F.lit(c).cast("int").alias("__carry_salt"),
+                 F.lit(mnus + c * spans[k] - 1).cast("long").alias("__bus"))
+        for k, (mnus, _) in hot_bounds_us.items() for c in range(1, n_salts)
+    ]
     if not brows:
         return None
-    key_type = dict(right.dtypes)[key]
-    bdf = right.sparkSession.createDataFrame(brows, schema=f"`{key}` {key_type}, __carry_salt int, __bus long")
+    bdf = right.sparkSession.range(1, numPartitions=1).select(F.inline(F.array(*brows)))
     rhot = (
         right.filter(F.col(key).isin(list(hot_bounds_us)))
         .withColumn("__rus", F.unix_micros(F.col(right_ts)))

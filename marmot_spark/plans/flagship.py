@@ -17,11 +17,14 @@ Scale shape (the properties the plan-audit suite pins on the bench gate):
   exchanges — deduped on that tuple, and equi-joined back to the token-
   bearing scan. The wide ``tokens`` arrays (~85% of scan bytes) NEVER enter
   a shuffle.
-* ONE plan-build collect. All per-entity chunk bounds AND per-hot-key as-of
-  salt ranges come from one aggregate over the narrow scan, grouped by
-  (entity, hot key) in their native key types and folded on the driver
-  into the two ``entity_time_bounds``-format maps; each operator collecting
-  its own would re-execute the upstream plan at plan-build time.
+* ONE plan-build collect. All per-entity chunk bounds, the per-hot-key as-of
+  salt ranges AND the scan row count the join-back regime needs come from
+  one aggregate over the narrow scan, grouped by (entity, hot key) in their
+  native key types and folded on the driver into the two
+  ``entity_time_bounds``-format maps and one summed count; each operator
+  collecting its own (or a separate ``wide.count()``) would re-execute the
+  upstream plan at plan-build time. The serial branch (no chunks, no hot
+  keys) has no aggregate and runs ``wide.count()`` alone.
 * SHARED chunk exchange. ``with_time_chunk`` emits one (entity, chunk)
   column that both chunked operators partition by, so sessionize reuses
   rolling_count's exchange.
@@ -95,21 +98,23 @@ def flagship_features(
     hot_keys = list(hot_keys) if hot_keys else []
 
     chunked = n_chunks > 1
-    bounds = hot_bounds_us = None
+    bounds = hot_bounds_us = n_rows = None
     if chunked or hot_keys:
-        # ONE collect for every plan-time bound (chunk spans + salt ranges):
-        # <= 64 entities x (hot keys + 1) rows, folded per entity and per hot key
+        # ONE collect for every plan-time bound (chunk spans + salt ranges) and
+        # the scan row count: <= 64 entities x (hot keys + 1) rows, folded per
+        # entity and per hot key, counts summed
         us = F.unix_micros(F.col(ts_col))
         rows = narrow.groupBy(
             entity_col, F.when(F.col(asof_on).isin(hot_keys), F.col(asof_on))
-        ).agg(F.min(us), F.max(us)).collect()
-        bounds, hot_bounds_us = {}, {}
+        ).agg(F.min(us), F.max(us), F.count(F.lit(1))).collect()
+        bounds, hot_bounds_us, n_rows = {}, {}, 0
 
         def widen(acc, k, mn, mx):
             lo, hi = acc.get(k, (mn, mx))
             acc[k] = (min(lo, mn), max(hi, mx))
 
-        for ent, hot, mn, mx in rows:
+        for ent, hot, mn, mx, n in rows:
+            n_rows += n
             if mn is not None:
                 widen(bounds, ent, mn, mx)
                 if hot is not None:
@@ -161,8 +166,10 @@ def flagship_features(
     feats = base.select(*join_keys, *feat_cols).dropDuplicates(join_keys)
 
     # conditional join-back: scan row count is an exact upper bound on the
-    # (deduped) narrow side
-    n_rows = wide.count()
+    # (deduped) narrow side; the serial branch has no bounds aggregate to
+    # count it
+    if n_rows is None:
+        n_rows = wide.count()
     if n_rows <= broadcast_max_rows:
         joined = wide.join(F.broadcast(feats), join_keys)
     else:

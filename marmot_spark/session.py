@@ -96,6 +96,16 @@ def build_session(
         # bandwidth) that contends at scale. Same reasoning holds on a real
         # cluster where shuffle crosses the network.
         .config("spark.io.compression.codec", "zstd")
+        # no per-call Python call-site capture: with it on, every Column API
+        # call walks the Python stack and makes ~5 extra py4j calls, and one
+        # flagship plan build makes ~600 such calls (median build 2.09 s on
+        # vs 1.43 s off, 8 alternating builds in one session, 4-vCPU VM).
+        # Errors keep their class and message (an AnalysisException still
+        # names the bad column while the plan is built); they lose only the
+        # Python call-site block. PySpark caches the flag at the first Column
+        # API call in the process, so it holds where build_session makes the
+        # process's first session.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # env-injected overrides (last wins) — lets subprocess-driven benchmarks
     # (BENCH/sweep_configs.py) A/B single configs without code edits:

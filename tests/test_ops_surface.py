@@ -209,6 +209,19 @@ def test_external_pipe_worker_death_and_overflow_fail_loudly(spark):
         pipe_text(df, "text", failing, out_col="o", per_partition=True).collect()
 
 
+def test_build_session_errors_name_the_column_at_plan_build(spark):
+    """``build_session`` turns off PySpark's per-call call-site capture; a bad
+    column still fails while the plan is built, with its error class and a
+    message naming the column (only the Python call-site block is gone)."""
+    from pyspark.errors import AnalysisException
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    df = spark.range(3).withColumn("ok", F.col("id") + 1)
+    with pytest.raises(AnalysisException, match="no_such_col") as err:
+        df.select(F.upper(F.col("no_such_col")).alias("up"))
+    assert err.value.getCondition().startswith("UNRESOLVED_COLUMN")
+
+
 def test_binarize_guardrails(spark):
     """F8: fitting a high-cardinality (non-categorical) column must raise
     before the single-task global sort / giant broadcast (VERDICT r2 §wrong 1);

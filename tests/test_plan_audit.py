@@ -165,6 +165,46 @@ def test_flagship_has_no_python_udfs(spark):
         assert marker not in plan, marker
 
 
+def _python_rdd_scans(jplan) -> list[str]:
+    """Every RDD scan in a physical plan (all children, broadcast subplans
+    included, and subqueries) whose RDD lineage holds a PythonRDD."""
+    found, stack = [], [jplan]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "RDDScanExec" and "PythonRDD" in node.rdd().toDebugString():
+            found.append(node.toString())
+        for seq in (node.children(), node.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return found
+
+
+def test_flagship_plan_build_stays_in_the_jvm(spark, fixture_dir):
+    """The salted as-of's (hot key x chunk boundary) relation is a JVM
+    literal relation, so no RDD scan of the executed flagship plan reads a
+    PythonRDD (a Python-list ``createDataFrame`` did, and every run started
+    Python workers to serialize ~30 rows). The join-back's row count rides
+    the one bounds aggregate, so the plan build runs 4 jobs, not 5: the two
+    parquet schema reads, the bounds aggregate, and the broadcast that the
+    lazy pin of the sessionized frame starts when it plans its RDD."""
+    import bench
+
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")  # as bench.py runs it
+    group = "test_flagship_plan_build_stays_in_the_jvm"
+    try:
+        sc.setJobGroup(group, group)
+        flag = bench.flagship_pipeline(spark, fixture_dir)
+        sc._jsc.clearJobGroup()
+        jplan = flag._jdf.queryExecution().executedPlan()
+        assert "Generate inline" in jplan.toString()  # the boundary relation
+        assert _python_rdd_scans(jplan) == []
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+    finally:
+        sc._jsc.clearJobGroup()
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
 def test_pack_segments_plan_is_parallel(spark, sf_dir):
     """The packing cumsum must partition by (part, chunk) — never a
     SinglePartition exchange (which the naive whole-part window would emit
