@@ -48,11 +48,11 @@ from marmot_spark.operators.similarity import (
     lsh_topk,
 )
 from marmot_spark.operators.windows import (
-    entity_time_bounds,
     explode_tokens,
     explode_with_context,
     rolling_count,
     sessionize,
+    with_time_chunk,
 )
 
 P31 = 2_147_483_647
@@ -524,11 +524,11 @@ def _q_a4_rolling_chunked(spark, sf):
     per-entity time-range chunks, in-chunk frames + chunk-tail sideband.
     The driver gate pins chunked == SQL."""
     ev = _events(spark, sf).withColumn("value_c", _cents("value"))
-    # one plan-time bounds collect shared by both passes
-    bounds = entity_time_bounds(ev, "event_type", "ts")
-    ev = rolling_count(ev, "event_type", "ts", 3600, "rolling_n", n_chunks=4, bounds=bounds)
+    # one plan-time bounds collect; both passes partition by the one column
+    ev = with_time_chunk(ev, "event_type", "ts", 4)
+    ev = rolling_count(ev, "event_type", "ts", 3600, "rolling_n", chunk_col="__tchunk")
     ev = rolling_count(
-        ev, "event_type", "ts", 3600, "rolling_value_c", value_col="value_c", n_chunks=4, bounds=bounds
+        ev, "event_type", "ts", 3600, "rolling_value_c", value_col="value_c", chunk_col="__tchunk"
     )
     return ev.select("event_id", "event_type", F.unix_micros("ts").alias("ts_us"), "rolling_n", "rolling_value_c")
 
@@ -536,8 +536,8 @@ def _q_a4_rolling_chunked(spark, sf):
 def _q_w6_sessionize_chunked(spark, sf):
     """W6 through the chunked scale path (n_chunks=4) on event_type: local
     sessions per time chunk + boundary-merge offsets; gate pins chunked==SQL."""
-    ev = sessionize(_events(spark, sf), "event_type", "ts", 1800.0,
-                    order_extra=["event_id"], n_chunks=4)
+    ev = with_time_chunk(_events(spark, sf), "event_type", "ts", 4)
+    ev = sessionize(ev, "event_type", "ts", 1800.0, order_extra=["event_id"], chunk_col="__tchunk")
     return ev.select("event_id", "event_type", F.unix_micros("ts").alias("ts_us"), "session_id")
 
 

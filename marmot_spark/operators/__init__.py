@@ -4,7 +4,6 @@ from marmot_spark.operators.windows import (
     explode_with_context,
     rolling_count,
     sessionize,
-    with_context_window,
 )
 
 __all__ = [
@@ -12,7 +11,6 @@ __all__ = [
     "detect_hot_keys",
     "explode_tokens",
     "explode_with_context",
-    "with_context_window",
     "sessionize",
     "rolling_count",
 ]

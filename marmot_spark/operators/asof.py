@@ -413,17 +413,18 @@ def asof_join_forward(
     """
     left = ntz_to_ts(left, left_ts)
     right = ntz_to_ts(right, right_ts)
-    piv = F.lit(_FWD_PIVOT_US)
-    l2 = left.withColumn("__rev_lts", F.timestamp_micros(piv - F.unix_micros(F.col(left_ts))))
-    r2 = right.withColumn("__rev_rts", F.timestamp_micros(piv - F.unix_micros(F.col(right_ts)))).drop(right_ts)
+
+    def reflect(c):
+        return F.timestamp_micros(F.lit(_FWD_PIVOT_US) - F.unix_micros(F.col(c)))
+
+    l2 = left.select("*", reflect(left_ts).alias("__rev_lts"))
+    r2 = right.select(*[c for c in right.columns if c != right_ts], reflect(right_ts).alias("__rev_rts"))
     out = asof_join(
         l2, r2, on=on, left_ts="__rev_lts", right_ts="__rev_rts",
         payload=payload, tie_break=tie_break, tolerance_us=tolerance_us,
         strategy=strategy, hot_keys=hot_keys, n_salts=n_salts,
     )
-    return out.withColumn(
-        "matched_ts", F.timestamp_micros(piv - F.unix_micros(F.col("matched_ts")))
-    ).drop("__rev_lts")
+    return out.select(*left.columns, *payload, reflect("matched_ts").alias("matched_ts"))
 
 
 def asof_join_nearest(
@@ -461,9 +462,9 @@ def asof_join_nearest(
         tie_break=tie_break, tolerance_us=tolerance_us, strategy=strategy,
         hot_keys=hot_keys, n_salts=n_salts,
     )
-    ren = {c: f"__bwd_{c}" for c in list(payload) + ["matched_ts"]}
-    for old, new in ren.items():
-        b = b.withColumnRenamed(old, new)
+    fill = list(payload) + ["matched_ts"]
+    left_cols = [c for c in b.columns if c not in fill]
+    b = b.select(*left_cols, *[F.col(c).alias(f"__bwd_{c}") for c in fill])
     f2 = asof_join_forward(
         b, right, on=on, left_ts=left_ts, right_ts=right_ts, payload=payload,
         tie_break=tie_break, tolerance_us=tolerance_us, strategy=strategy,
@@ -474,7 +475,6 @@ def asof_join_nearest(
     use_b = F.col("__bwd_matched_ts").isNotNull() & (
         F.col("matched_ts").isNull() | (dist_b <= dist_f)
     )
-    out = f2
-    for c in list(payload) + ["matched_ts"]:
-        out = out.withColumn(c, F.when(use_b, F.col(f"__bwd_{c}")).otherwise(F.col(c)))
-    return out.drop(*ren.values())
+    return f2.select(
+        *left_cols, *[F.when(use_b, F.col(f"__bwd_{c}")).otherwise(F.col(c)).alias(c) for c in fill]
+    )

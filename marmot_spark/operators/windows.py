@@ -21,9 +21,15 @@ Reference semantics re-expressed (SURVEY.md §2.5):
 Every event-time operator takes one time domain: TimestampType, framed and
 chunked on unix_micros (NTZ input is normalized first; anything else is
 refused while the plan is built).
+
+The chunked path for hot, low-cardinality entities has one way in:
+:func:`with_time_chunk`'s column carries its own geometry in its metadata,
+which :func:`sessionize` / :func:`rolling_count` read from ``chunk_col=``.
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -89,19 +95,6 @@ def context_col(tokens_col: str, pos_col: str, offset: int) -> Column:
     return F.coalesce(F.get(F.col(tokens_col), F.col(pos_col) + F.lit(offset)), F.lit(sentinel))
 
 
-def with_context_window(df: DataFrame, k: int = 2, tokens_col: str = "tokens", pos_col: str = "pos") -> DataFrame:
-    """Add lag_1..lag_k / lead_1..lead_k sentinel-padded context columns.
-
-    Post-explode form: requires the tokens array on each exploded row. NOTE —
-    carrying the array through the explode costs O(len^2) memory traffic per
-    doc; prefer ``explode_with_context`` (O(len*k)) on long documents.
-    """
-    for i in range(1, k + 1):
-        df = df.withColumn(f"lag_{i}", context_col(tokens_col, pos_col, -i))
-        df = df.withColumn(f"lead_{i}", context_col(tokens_col, pos_col, i))
-    return df
-
-
 def explode_with_context(
     df: DataFrame, k: int = 2, tokens_col: str = "tokens", keep: list[str] | None = None
 ) -> DataFrame:
@@ -134,8 +127,6 @@ def sessionize(
     gap_seconds: float,
     session_col: str = "session_id",
     order_extra: list[str] | None = None,
-    n_chunks: int | None = None,
-    bounds: dict | None = None,
     chunk_col: str | None = None,
     order_col: str | None = None,
 ) -> DataFrame:
@@ -144,19 +135,21 @@ def sessionize(
     One shuffle on ``entity``; deterministic under duplicate timestamps via
     ``order_extra`` tie-break columns.
 
-    ``n_chunks``: the scale path for LOW-CARDINALITY / HOT entity keys (the
-    north rule's sessionize-by-source with a 55%-hot source). A per-entity
-    ordered scan caps parallelism at #entities, so with n_chunks each entity
-    is split into time-range chunks, sessions are computed locally per chunk
-    (parallel), and a tiny per-chunk summary (first/last ts, #sessions)
-    computes boundary offsets: a chunk whose first event is within
+    ``chunk_col`` (a :func:`with_time_chunk` column for the same entity and
+    ts): the scale path for LOW-CARDINALITY / HOT entity keys (the north
+    rule's sessionize-by-source with a 55%-hot source). A per-entity ordered
+    scan caps parallelism at #entities, so sessions are computed locally per
+    (entity, chunk) (parallel), and a tiny per-chunk summary (first/last ts,
+    #sessions) computes boundary offsets: a chunk whose first event is within
     gap_seconds of the previous chunk's last event merges its first session
     backwards. Exactly equal to the serial result; parallelism becomes
-    #entities * n_chunks. ``bounds``: precomputed chunk bounds in the
-    :func:`entity_time_bounds` format (integer micros); None collects them.
+    #entities * n_chunks.
     """
     df = _require_timestamp(df, ts, "sessionize")
     _check_order_col(df, order_col)
+    if chunk_col is not None:
+        # the boundary merge is exact only over time-range chunks in order
+        _time_chunk_geometry(df, chunk_col, entity, ts)
     tdouble = F.col(ts).cast("double")
     # order by integer micros (same ordering as the raw timestamp) so a
     # downstream rolling_count window — whose RANGE frames must sort by
@@ -168,7 +161,7 @@ def sessionize(
     # prefix-match this operator's sort order and be elided.
     lead = F.col(order_col) if order_col is not None else F.unix_micros(F.col(ts))
     order = [lead.asc()] + [F.col(c).asc() for c in (order_extra or [])]
-    if (not n_chunks or n_chunks <= 1) and chunk_col is None:
+    if chunk_col is None:
         w = Window.partitionBy(entity).orderBy(*order)
         gap = tdouble - F.lag(tdouble, 1).over(w)
         new_sess = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
@@ -177,25 +170,19 @@ def sessionize(
             F.sum(new_sess).over(w.rowsBetween(Window.unboundedPreceding, 0)).cast("long"),
         )
 
-    if chunk_col is not None:
-        # pre-chunked input (with_time_chunk): partition by the EXISTING column
-        # so this operator rides the upstream exchange instead of re-shuffling
-        chunked, ch = df, chunk_col
-    else:
-        chunked, ch = with_time_chunk(df, entity, ts, n_chunks, bounds=bounds, chunk_col="__chunk"), "__chunk"
-    w_loc = Window.partitionBy(entity, ch).orderBy(*order)
+    w_loc = Window.partitionBy(entity, chunk_col).orderBy(*order)
     gap = tdouble - F.lag(tdouble, 1).over(w_loc)
     new_sess = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
-    local = chunked.withColumn(
+    local = df.withColumn(
         "__lsess", F.sum(new_sess).over(w_loc.rowsBetween(Window.unboundedPreceding, 0)).cast("long")
     )
 
-    summ = local.groupBy(entity, F.col(ch).alias("__chunk")).agg(
+    summ = local.groupBy(entity, chunk_col).agg(
         F.min(tdouble).alias("__first_t"),
         F.max(tdouble).alias("__last_t"),
         F.max("__lsess").alias("__nsess"),
     )
-    w_chunks = Window.partitionBy(entity).orderBy(F.col("__chunk").asc())
+    w_chunks = Window.partitionBy(entity).orderBy(F.col(chunk_col).asc())
     merge = (
         (F.col("__first_t") - F.lag("__last_t", 1).over(w_chunks)) <= gap_seconds
     ).cast("long")
@@ -207,17 +194,12 @@ def sessionize(
             F.sum("__nsess").over(w_chunks.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)
         )
         - F.sum("__merge").over(w_chunks.rowsBetween(Window.unboundedPreceding, 0)),
-    ).select(entity, "__chunk", "__offset")
+    ).select(entity, chunk_col, "__offset")
 
-    out = local.join(
-        F.broadcast(summ.withColumnRenamed("__chunk", ch) if ch != "__chunk" else summ),
-        [entity, ch],
-    )
-    out = out.withColumn(session_col, (F.col("__lsess") + F.col("__offset")).cast("long")).drop(
+    out = local.join(F.broadcast(summ), [entity, chunk_col])
+    return out.withColumn(session_col, (F.col("__lsess") + F.col("__offset")).cast("long")).drop(
         "__lsess", "__offset"
     )
-    # internal chunk col is dropped; a caller-provided chunk_col stays
-    return out.drop("__chunk") if chunk_col is None else out
 
 
 def _spans_us(bounds_us: dict, n_chunks: int) -> dict:
@@ -252,18 +234,22 @@ def _chunk_of_expr(cus, bounds_us: dict, spans: dict, n_chunks: int, ent_col: st
     )
 
 
-def _chunk_bounds_us(df: DataFrame, entity: str, ts: str, bounds: dict | None) -> dict:
-    """Chunk bounds per entity: the caller's ``bounds`` or, when None, one
-    :func:`entity_time_bounds` collect over ``df``; entries without a min or
-    max (an entity whose ts is all NULL) are dropped, so they chunk as 0."""
-    if bounds is None:
-        bounds = entity_time_bounds(df, entity, ts)
-    if len(bounds) > 64:
-        raise ValueError(
-            f"n_chunks chunking is for low-cardinality/hot entities; {entity!r} has "
-            f"{len(bounds)} values — a plain per-entity window already parallelizes"
-        )
-    return {k: (mn, mx) for k, (mn, mx) in bounds.items() if mn is not None and mx is not None}
+# Spark metadata rejects nested arrays: the bounds ride as one JSON string of
+# [key, min_us, max_us] triples (native key types and NULL keys survive JSON)
+_CHUNK_META = "marmot_time_chunk"
+
+
+def _time_chunk_geometry(df: DataFrame, chunk_col: str, entity: str, ts: str) -> tuple[int, dict]:
+    """``(n_chunks, {key: (min_us, max_us)})`` that :func:`with_time_chunk`
+    stored on ``chunk_col``; ``ValueError`` when the column carries none or
+    was built for another entity or ts column."""
+    field = next((f for f in df.schema.fields if f.name == chunk_col), None)
+    geo = field.metadata.get(_CHUNK_META) if field is not None else None
+    if geo is None:
+        raise ValueError(f"chunk_col {chunk_col!r} carries no chunk geometry; build it with with_time_chunk")
+    if (geo["entity"], geo["ts"]) != (entity, ts):
+        raise ValueError(f"chunk_col {chunk_col!r} chunks {geo['entity']!r} by {geo['ts']!r}, not {entity!r} by {ts!r}")
+    return geo["n_chunks"], {k: (mn, mx) for k, mn, mx in json.loads(geo["bounds"])}
 
 
 def with_time_chunk(
@@ -285,32 +271,42 @@ def with_time_chunk(
     and add an exchange + stage per consumer. Rows whose entity is missing
     from ``bounds`` (or whose ts falls outside) clamp into chunk 0 /
     n_chunks-1 — correctness never depends on bounds being tight, only
-    parallelism does.
+    parallelism does. An entity whose ts is all NULL chunks as 0.
 
-    The column is also how chunked operators SHARE one shuffle:
-    `rolling_count(..., chunk_col=...)` then `sessionize(..., chunk_col=...)`
-    both partition by (entity, chunk_col), so the second operator reuses the
-    first's exchange instead of re-shuffling the wide payload.
+    The one way into the chunked path: the column's Spark metadata records
+    its geometry (entity, ts, n_chunks, bounds); it survives projections,
+    joins, grouping and checkpoints, and ``sessionize(..., chunk_col=)``
+    then ``rolling_count(..., chunk_col=)`` read it and partition by
+    (entity, chunk_col), so the second reuses the first's exchange. Entity
+    keys other than strings, numbers or NULL raise ``ValueError``.
     """
     df = _require_timestamp(df, ts, "with_time_chunk")
-    bus = _chunk_bounds_us(df, entity, ts, bounds)
-    spans = _spans_us(bus, n_chunks)
-    return df.withColumn(
-        chunk_col, _chunk_of_expr(F.unix_micros(F.col(ts)), bus, spans, n_chunks, entity)
-    )
+    if bounds is None:
+        bounds = entity_time_bounds(df, entity, ts)
+    if len(bounds) > 64:
+        raise ValueError(
+            f"n_chunks chunking is for low-cardinality/hot entities; {entity!r} has "
+            f"{len(bounds)} values — a plain per-entity window already parallelizes"
+        )
+    bus = {k: (mn, mx) for k, (mn, mx) in bounds.items() if mn is not None and mx is not None}
+    if any(k is not None and not isinstance(k, (str, int, float)) for k in bus):
+        raise ValueError(f"with_time_chunk keys must be strings, numbers or NULL, got {list(bus)}")
+    triples = json.dumps([[k, mn, mx] for k, (mn, mx) in bus.items()], allow_nan=False)
+    geo = {"entity": entity, "ts": ts, "n_chunks": n_chunks, "bounds": triples}
+    chunk = _chunk_of_expr(F.unix_micros(F.col(ts)), bus, _spans_us(bus, n_chunks), n_chunks, entity)
+    return df.withColumn(chunk_col, chunk.alias(chunk_col, metadata={_CHUNK_META: geo}))
 
 
 def entity_time_bounds(df: DataFrame, entity: str, ts: str) -> dict:
     """``{entity: (min_us, max_us)}``: per-entity min/max of
     ``unix_micros(ts)`` as Python ints — one tiny aggregate, collected once.
 
-    This is the one bounds format: ``bounds=`` of :func:`with_time_chunk`,
-    :func:`sessionize` and :func:`rolling_count`, and ``hot_bounds_us=`` of
-    ``asof_join``. Compute it on the CHEAPEST upstream frame (usually the raw
-    scan) and pass it on: chunking only needs the time range per entity, and
-    row-preserving operators upstream don't change it. Without precomputed
-    bounds each chunked operator collects its own, which re-executes the
-    whole upstream plan at plan-build time.
+    This is the one bounds format: ``bounds=`` of :func:`with_time_chunk`
+    and ``hot_bounds_us=`` of ``asof_join``. Compute it on the CHEAPEST
+    upstream frame (usually the raw scan) and pass it on: chunking only
+    needs the time range per entity, and row-preserving operators upstream
+    don't change it. Without precomputed bounds each of those calls collects
+    its own, which re-executes the whole upstream plan at plan-build time.
     """
     df = _require_timestamp(df, ts, "entity_time_bounds")
     us = F.unix_micros(F.col(ts))
@@ -325,11 +321,11 @@ def _rolling_chunked_frames(
     window_seconds: int,
     out_col: str,
     value_col: str | None,
-    n_chunks: int,
-    bounds: dict | None,
     delta_type: str,
-    chunk_col: str | None = None,
-    order_col: str | None = None,
+    chunk_col: str,
+    order_col: str | None,
+    n_chunks: int,
+    bounds_us: dict,
 ) -> DataFrame | None:
     """Chunked rolling counts via in-chunk frames + a chunk-tail sideband.
 
@@ -361,7 +357,6 @@ def _rolling_chunked_frames(
     """
     tus = F.col(order_col) if order_col is not None else F.unix_micros(F.col(ts))
     wus = window_seconds * 1_000_000
-    bounds_us = _chunk_bounds_us(df, entity, ts, bounds)
     spans = _spans_us(bounds_us, n_chunks)
     if not bounds_us or any(wus >= span for span in spans.values()):
         return None
@@ -370,14 +365,7 @@ def _rolling_chunked_frames(
         return _chunk_of_expr(cus, bounds_us, spans, n_chunks, ent_col)
 
     delta = F.lit(1).cast("long") if value_col is None else F.col(value_col)
-    if chunk_col is not None:
-        # pre-chunked input (with_time_chunk, same bounds/n_chunks): ride the
-        # existing column so the exchange is shared with sibling operators
-        base, ch = df, chunk_col
-    else:
-        base, ch = df.withColumn("__chunk", chunk_of(tus, entity)), "__chunk"
-
-    w_ord = Window.partitionBy(entity, ch).orderBy(tus)
+    w_ord = Window.partitionBy(entity, chunk_col).orderBy(tus)
     # ONE select, not three withColumns: each withColumn makes its own Window
     # logical node whose computed order key (unix_micros) is re-aliased to a
     # fresh _w0 attribute, so the order specs stop being syntactically equal
@@ -386,7 +374,7 @@ def _rolling_chunked_frames(
     # re-executes all three). From a single projection, ExtractWindowExpressions
     # groups all three frames under one (partition, order) spec: one sort,
     # one WindowExec.
-    ev = base.select(
+    ev = df.select(
         "*",
         F.sum(delta).over(w_ord.rangeBetween(Window.unboundedPreceding, 0)).alias("__lcum"),
         F.sum(delta).over(w_ord.rangeBetween(Window.unboundedPreceding, -(wus + 1))).alias("__llt"),
@@ -402,23 +390,23 @@ def _rolling_chunked_frames(
             F.lit(0).cast("long"),
         )
 
-    start = chunk_start(F.col(ch))
+    start = chunk_start(F.col(chunk_col))
     p = tus - F.lit(wus)
     # chunk 0 has no earlier chunk: every event below the probe point is
     # in-chunk (clamped rows included), so llt already covers it — interior
     # formula applies and no probe is needed
-    is_bnd = (p < start) & (F.col(ch) > 0)
+    is_bnd = (p < start) & (F.col(chunk_col) > 0)
 
     probes = ev.filter(is_bnd).select(
         F.col(entity).alias("__ent"), p.alias("__tus"), F.lit(0).alias("__side"),
-        F.col(ch).alias("__pchunk"), F.col("__lrn").alias("__prn"),
+        F.col(chunk_col).alias("__pchunk"), F.col("__lrn").alias("__prn"),
         F.lit(None).cast(delta_type).alias("__delta"),
     )
     # sideband events: only each chunk's LAST-W tail can be >= some probe
     # point (plus loose-bounds clamped strays) — chunk_of(ts + W) names the
     # chunk whose probes the event can serve; keep iff ts < that chunk's
     # start (i.e. the event lies strictly before the served chunk)
-    tail = base.filter(tus < chunk_start(chunk_of(tus + F.lit(wus), entity))).select(
+    tail = df.filter(tus < chunk_start(chunk_of(tus + F.lit(wus), entity))).select(
         F.col(entity).alias("__ent"), tus.alias("__tus"), F.lit(1).alias("__side"),
         F.lit(None).cast("int").alias("__pchunk"), F.lit(None).cast("long").alias("__prn"),
         delta.cast(delta_type).alias("__delta"),
@@ -444,7 +432,7 @@ def _rolling_chunked_frames(
     out = ev.join(
         F.broadcast(probe_res),
         (ev[entity] == probe_res["__ent"])
-        & (ev[ch] == probe_res["__pchunk"])
+        & (ev[chunk_col] == probe_res["__pchunk"])
         & (ev["__lrn"] == probe_res["__prn"]),
         "left",
     )
@@ -466,8 +454,6 @@ def rolling_count(
     out_col: str = "rolling_n",
     value_col: str | None = None,
     strategy: str = "difference",
-    n_chunks: int | None = None,
-    bounds: dict | None = None,
     chunk_col: str | None = None,
     order_col: str | None = None,
 ) -> DataFrame:
@@ -489,13 +475,13 @@ def rolling_count(
       WindowExec sharing one sort: one shuffle on ``entity``, no joins.
       Spark's UnboundedPreceding frames advance their upper pointer
       monotonically (O(n)), unlike sliding frames which rescan.
-    * ``strategy="difference"`` with ``n_chunks > 1``: the same frames per
+    * ``strategy="difference"`` with ``chunk_col``: the same frames per
       (entity, time chunk) plus a chunk-tail sideband
       (:func:`_rolling_chunked_frames`) — the scale path for hot,
-      low-cardinality entities. When the window reaches a whole chunk span
-      it falls back to the serial frames above (same result, parallelism
-      capped at #entities). ``bounds``: as for :func:`sessionize`, the
-      :func:`entity_time_bounds` format in integer micros.
+      low-cardinality entities, on the geometry a :func:`with_time_chunk`
+      column recorded (as for :func:`sessionize`). When the window reaches
+      a whole chunk span it falls back to the serial frames above (same
+      result, parallelism capped at #entities).
 
     ``order_col`` (difference paths): a caller-MATERIALIZED column holding
     exactly ``unix_micros(ts)``. Ordering windows by the shared attribute
@@ -506,6 +492,7 @@ def rolling_count(
     """
     df = _require_timestamp(df, ts, "rolling_count")
     _check_order_col(df, order_col)
+    geometry = _time_chunk_geometry(df, chunk_col, entity, ts) if chunk_col is not None else None
     if strategy == "range":
         w = (
             Window.partitionBy(entity)
@@ -519,10 +506,10 @@ def rolling_count(
         raise ValueError(f"unknown strategy {strategy!r}")
 
     delta_type = "long" if value_col is None else dict(df.dtypes)[value_col]
-    if n_chunks and n_chunks > 1:
+    if geometry is not None:
         out = _rolling_chunked_frames(
-            df, entity, ts, int(window_seconds), out_col, value_col, n_chunks, bounds,
-            delta_type, chunk_col=chunk_col, order_col=order_col,
+            df, entity, ts, int(window_seconds), out_col, value_col, delta_type,
+            chunk_col, order_col, *geometry,
         )
         if out is not None:
             return out

@@ -26,8 +26,9 @@ Scale shape (the properties the plan-audit suite pins on the bench gate):
   upstream plan at plan-build time. The serial branch (no chunks, no hot
   keys) has no aggregate and runs ``wide.count()`` alone.
 * SHARED chunk exchange. ``with_time_chunk`` emits one (entity, chunk)
-  column that both chunked operators partition by, so sessionize reuses
-  rolling_count's exchange.
+  column, carrying its own chunk geometry, that both chunked operators
+  partition by and read their geometry from, so rolling_count reuses
+  sessionize's exchange.
 * CONDITIONAL join-back. Under ``broadcast_max_rows`` (at most one feature
   row per sequence — the scan row count is an exact upper bound) the narrow
   side is force-broadcast; above it a driver broadcast is an OOM
@@ -128,14 +129,13 @@ def flagship_features(
     # orderBy instead plans a fresh _w0 alias per operator and every window
     # re-sorts.) The chunked path adds the shared (entity, chunk) column.
     base = narrow
-    chunk_kw = {}
+    chunk_col = "__tchunk" if chunked else None
     if chunked:
-        base = with_time_chunk(base, entity_col, ts_col, n_chunks, bounds=bounds)
-        chunk_kw = dict(n_chunks=n_chunks, bounds=bounds, chunk_col="__tchunk")
+        base = with_time_chunk(base, entity_col, ts_col, n_chunks, bounds=bounds, chunk_col=chunk_col)
     base = base.withColumn("__ous", F.unix_micros(F.col(ts_col)))
     base = sessionize(
         base, entity_col, ts_col, session_gap_s, order_extra=order_extra,
-        **chunk_kw, order_col="__ous",
+        chunk_col=chunk_col, order_col="__ous",
     )
     if chunked:
         # rolling_count's sideband branches (boundary probes + chunk tails)
@@ -148,7 +148,7 @@ def flagship_features(
         base = materialize(base, eager=False)
     base = rolling_count(
         base, entity_col, ts_col, rolling_window_s, "rolling_docs",
-        **chunk_kw, order_col="__ous",
+        chunk_col=chunk_col, order_col="__ous",
     ).drop("__tchunk", "__ous")
 
     # narrow the per-feature-row payload BEFORE the explode multiplies it

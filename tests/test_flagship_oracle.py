@@ -138,3 +138,37 @@ def test_chunked_flagship_keeps_native_key_types(spark, fixture_dir):
         chunked, serial = (f.sort_values(list(f.columns)).reset_index(drop=True) for f in frames)
         assert len(serial) > 0, case_kw
         pd.testing.assert_frame_equal(chunked, serial)
+
+
+def test_benchmark_trace_finds_the_calls_it_replays(spark, fixture_dir):
+    """The benchmark's traced pass (perfbench/workloads.py,
+    ``FlagshipWorkload.trace``) replays the operator calls the chunked
+    flagship records, indexing some of their keywords: each call and keyword
+    it reads must be recorded, and its windows-layer replay must build, or
+    ``perfbench/run.py --trace 1`` fails."""
+    import bench
+    from pyspark.sql import functions as F
+
+    from marmot_spark.operators.windows import rolling_count, sessionize, with_time_chunk
+    from perfbench.workloads import _recording_plan_calls
+
+    with _recording_plan_calls() as calls:
+        bench.flagship_pipeline(spark, fixture_dir)
+    assert set(calls) == {"flagship_features", "with_time_chunk", "sessionize", "rolling_count",
+                          "asof_join", "explode_with_context"}
+    (wide, _), kw = calls["flagship_features"]
+    assert {"keys", "ts_col", "payload", "asof_on", "broadcast_max_rows"} <= set(kw)
+    r_args, r_kw = calls["rolling_count"]
+    assert {"order_col", "chunk_col"} <= set(r_kw)
+    assert "hot_keys" in calls["asof_join"][1]
+
+    # the windows layer as the trace replays it, down to the lazy checkpoint
+    # between the two operators
+    ts = kw["ts_col"]
+    args, kwargs = calls["with_time_chunk"]
+    base = with_time_chunk(wide.select(*kw["keys"], ts), *args[1:], **kwargs)
+    base = base.withColumn(r_kw["order_col"], F.unix_micros(F.col(ts)))
+    s_args, s_kw = calls["sessionize"]
+    base = sessionize(base, *s_args[1:], **s_kw).localCheckpoint(eager=False)
+    out = rolling_count(base, *r_args[1:], **r_kw).drop(r_kw["chunk_col"], r_kw["order_col"])
+    assert "rolling_docs" in out.columns

@@ -816,8 +816,9 @@ def test_operators_on_empty_and_degenerate_inputs(spark):
     assert entity_time_bounds(empty, "source", "seq_ts") == {}
     # chunked paths: empty bounds put every row in chunk 0
     assert with_time_chunk(empty, "source", "seq_ts", 4).count() == 0
-    assert sessionize(empty, "source", "seq_ts", 60.0, n_chunks=4).count() == 0
-    assert rolling_count(empty, "source", "seq_ts", 3600, "rn", n_chunks=4).count() == 0
+    chunked = with_time_chunk(empty, "source", "seq_ts", 4)
+    assert sessionize(chunked, "source", "seq_ts", 60.0, chunk_col="__tchunk").count() == 0
+    assert rolling_count(chunked, "source", "seq_ts", 3600, "rn", chunk_col="__tchunk").count() == 0
     assert minhash_lsh_pairs(empty, "doc_id", "tokens").count() == 0
 
     from datetime import datetime

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from marmot_spark.functions.binarize import binarize, fit_vocab
 from marmot_spark.operators.alignment import join_alignments, with_aligned_token
 from marmot_spark.operators.asof import asof_join
-from marmot_spark.operators.windows import explode_tokens, sessionize, with_context_window
+from marmot_spark.operators.windows import explode_tokens, explode_with_context, sessionize
 
 from tests import reference_oracle as oracle
 
@@ -18,32 +18,36 @@ from tests import reference_oracle as oracle
 def test_token_array_passthrough_equality(spark, fixture_dir):
     """Per-row invariant: tokens ride through the full pipeline unchanged.
 
-    Compared as multisets of (doc_id, seq_ts, tokens) — after as-of join +
-    explode + windows, regrouping must reproduce exactly the source arrays.
+    After as-of join + ``explode_with_context`` (the flagship's explode),
+    regrouping each row's (pos, tok) pairs in pos order must reproduce
+    exactly its source array, with positions 0..len-1 each once. Rows are
+    told apart by a pinned row id as well as (doc_id, seq_ts): the fixture
+    plants duplicate (doc_id, seq_ts) rows.
     """
-    seqs = spark.read.parquet(f"{fixture_dir}/sequences.parquet")
+    seqs = spark.read.parquet(f"{fixture_dir}/sequences.parquet").withColumn(
+        "rid", F.monotonically_increasing_id()
+    ).localCheckpoint()
     labels = spark.read.parquet(f"{fixture_dir}/labels.parquet")
     piped = asof_join(seqs, labels, "doc_id", "seq_ts", "label_ts", ["tag"], tie_break="label_seq")
-    out = with_context_window(explode_tokens(piped, keep=["doc_id", "seq_ts"]), k=2)
-    # every exploded token must equal its array slot (exercised post-join)
-    assert out.filter(F.get("tokens", F.col("pos")) != F.col("tok")).count() == 0
-    got = (
-        out.groupBy("doc_id", "seq_ts", "tokens").agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") != F.size("tokens")).count()
+    out = explode_with_context(piped, k=2, keep=["doc_id", "seq_ts", "rid"])
+    pairs = F.array_sort(F.collect_list(F.struct("pos", "tok")))
+    regrouped = out.groupBy("doc_id", "seq_ts", "rid").agg(
+        F.transform(pairs, lambda p: p["tok"]).alias("tokens"),
+        F.transform(pairs, lambda p: p["pos"]).alias("positions"),
     )
-    assert got == 0
-    src_sets = seqs.filter(F.size("tokens") > 0).groupBy("doc_id", "seq_ts", "tokens").count()
-    out_sets = out.groupBy("doc_id", "seq_ts", "tokens").agg(
-        (F.count(F.lit(1)) / F.size("tokens")).cast("long").alias("count")
-    )
-    assert src_sets.exceptAll(out_sets).count() == 0
-    assert out_sets.exceptAll(src_sets).count() == 0
+    assert regrouped.filter(
+        F.col("positions") != F.sequence(F.lit(0), F.size("tokens") - 1)
+    ).count() == 0
+    src = seqs.filter(F.size("tokens") > 0).select("doc_id", "seq_ts", "rid", "tokens")
+    got = regrouped.select("doc_id", "seq_ts", "rid", "tokens")
+    assert src.exceptAll(got).count() == 0
+    assert got.exceptAll(src).count() == 0
 
 
 def test_context_window_parity(spark, fixture_dir):
     seqs = spark.read.parquet(f"{fixture_dir}/sequences.parquet").limit(200)
     out = (
-        with_context_window(explode_tokens(seqs, keep=["doc_id", "seq_ts"]), k=2)
+        explode_with_context(seqs, k=2, keep=["doc_id", "seq_ts"])
         .select("doc_id", "seq_ts", "pos", "tok", "lag_1", "lag_2", "lead_1", "lead_2")
         .toPandas()
     )
@@ -130,20 +134,21 @@ def test_sessionize_parity(spark, fixture_dir):
 
 
 def test_chunked_sessionize_and_rolling_match_serial(spark, fixture_dir):
-    """n_chunks (hot-key scan parallelization) must be exactly equal to serial."""
-    from marmot_spark.operators.windows import rolling_count
+    """Time-chunked (hot-key scan parallelization) must be exactly equal to serial."""
+    from marmot_spark.operators.windows import rolling_count, with_time_chunk
 
     seqs = spark.read.parquet(f"{fixture_dir}/sequences.parquet").select(
         "doc_id", "seq_ts", "n_tok", "source"
     )
     cols = ["doc_id", "seq_ts", "n_tok", "source"]
-    a = sessionize(seqs, "source", "seq_ts", 60.0, order_extra=["doc_id", "n_tok"], n_chunks=5)
+    chunked = with_time_chunk(seqs, "source", "seq_ts", 5)
+    a = sessionize(chunked, "source", "seq_ts", 60.0, order_extra=["doc_id", "n_tok"], chunk_col="__tchunk")
     b = sessionize(seqs, "source", "seq_ts", 60.0, order_extra=["doc_id", "n_tok"])
     sel = cols + ["session_id"]
     assert a.select(sel).exceptAll(b.select(sel)).count() == 0
 
     for vc in [None, "n_tok"]:
-        a = rolling_count(seqs, "source", "seq_ts", 3600, "rn", value_col=vc, n_chunks=5)
+        a = rolling_count(chunked, "source", "seq_ts", 3600, "rn", value_col=vc, chunk_col="__tchunk")
         b = rolling_count(seqs, "source", "seq_ts", 3600, "rn", value_col=vc)
         sel = cols + ["rn"]
         assert a.select(sel).exceptAll(b.select(sel)).count() == 0, vc
@@ -155,12 +160,13 @@ def test_chunked_sessionize_and_rolling_match_serial(spark, fixture_dir):
     bounds = entity_time_bounds(seqs, "source", "seq_ts")
     loose = {k: (mn - 10_000_000, mx + 250_000_000) for k, (mn, mx) in bounds.items()}
     for bset in [bounds, loose]:
-        a = sessionize(seqs, "source", "seq_ts", 60.0, order_extra=["doc_id", "n_tok"], n_chunks=5, bounds=bset)
+        chunked = with_time_chunk(seqs, "source", "seq_ts", 5, bounds=bset)
+        a = sessionize(chunked, "source", "seq_ts", 60.0, order_extra=["doc_id", "n_tok"], chunk_col="__tchunk")
         sel = cols + ["session_id"]
         assert a.select(sel).exceptAll(
             sessionize(seqs, "source", "seq_ts", 60.0, order_extra=["doc_id", "n_tok"]).select(sel)
         ).count() == 0
-        r = rolling_count(seqs, "source", "seq_ts", 3600, "rn", n_chunks=5, bounds=bset)
+        r = rolling_count(chunked, "source", "seq_ts", 3600, "rn", chunk_col="__tchunk")
         sel = cols + ["rn"]
         assert r.select(sel).exceptAll(
             rolling_count(seqs, "source", "seq_ts", 3600, "rn").select(sel)
@@ -170,7 +176,7 @@ def test_chunked_sessionize_and_rolling_match_serial(spark, fixture_dir):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="low-cardinality"):
-        sessionize(seqs, "doc_id", "seq_ts", 60.0, n_chunks=4).collect()
+        with_time_chunk(seqs, "doc_id", "seq_ts", 4)
 
 
 def test_chunked_rolling_randomized_stress(spark):
@@ -182,7 +188,7 @@ def test_chunked_rolling_randomized_stress(spark):
     import numpy as np
     from datetime import datetime, timedelta
 
-    from marmot_spark.operators.windows import rolling_count
+    from marmot_spark.operators.windows import rolling_count, with_time_chunk
 
     rng = np.random.default_rng(7)
     base = datetime(2026, 1, 1)
@@ -195,9 +201,10 @@ def test_chunked_rolling_randomized_stress(spark):
                 rows.append((ent, base + timedelta(seconds=t),
                              int(rng.integers(-5, 10))))
         df = spark.createDataFrame(rows, "ent string, ts timestamp, v long")
+        chunked = with_time_chunk(df, "ent", "ts", n_chunks)
         for vc in [None, "v"]:
-            got = rolling_count(df, "ent", "ts", win, "rn", value_col=vc,
-                                n_chunks=n_chunks)
+            got = rolling_count(chunked, "ent", "ts", win, "rn", value_col=vc,
+                                chunk_col="__tchunk")
             want = rolling_count(df, "ent", "ts", win, "rn", value_col=vc,
                                  strategy="range")
             sel = ["ent", "ts", "v", "rn"]
@@ -227,13 +234,46 @@ def test_shared_chunk_col_matches_serial(spark, fixture_dir):
     # frames on a frame that still carries the shared chunk column
     sel = ["doc_id", "seq_ts", "n_tok", "source", "rn", "session_id"]
     for win in [3600, 50_000]:
-        a = rolling_count(shared, "source", "seq_ts", win, "rn", n_chunks=5, bounds=bounds, chunk_col="__tchunk")
+        a = rolling_count(shared, "source", "seq_ts", win, "rn", chunk_col="__tchunk")
         a = sessionize(a, "source", "seq_ts", 60.0, order_extra=["doc_id", "n_tok"],
-                       n_chunks=5, bounds=bounds, chunk_col="__tchunk").drop("__tchunk")
+                       chunk_col="__tchunk").drop("__tchunk")
         b = rolling_count(seqs, "source", "seq_ts", win, "rn")
         b = sessionize(b, "source", "seq_ts", 60.0, order_extra=["doc_id", "n_tok"])
         assert a.select(sel).exceptAll(b.select(sel)).count() == 0, win
         assert b.select(sel).exceptAll(a.select(sel)).count() == 0, win
+
+
+def test_chunk_col_must_carry_with_time_chunk_geometry(spark, fixture_dir):
+    """with_time_chunk is the one way into the chunked path: its column
+    records the geometry (entity, ts, n_chunks, bounds) both chunked
+    operators compute with. A chunk column it did not build (here n_tok % 4,
+    not a time range), a missing one, or one built for another entity fails
+    while the plan is built instead of giving wrong sessions or counts."""
+    import datetime
+
+    import pytest
+
+    from marmot_spark.operators.windows import rolling_count, with_time_chunk
+
+    seqs = spark.read.parquet(f"{fixture_dir}/sequences.parquet").select(
+        "doc_id", "seq_ts", "n_tok", "source"
+    )
+    foreign = seqs.withColumn("__tchunk", (F.col("n_tok") % 4).cast("int"))
+    other = with_time_chunk(seqs.withColumn("src2", F.col("source")), "src2", "seq_ts", 4)
+    ops = (
+        lambda df: sessionize(df, "source", "seq_ts", 60.0, chunk_col="__tchunk"),
+        lambda df: rolling_count(df, "source", "seq_ts", 3600, "rn", chunk_col="__tchunk"),
+    )
+    for op in ops:
+        for bad in (foreign, seqs):
+            with pytest.raises(ValueError, match="no chunk geometry"):
+                op(bad)
+        with pytest.raises(ValueError, match="chunks 'src2'"):
+            op(other)
+    # a key type JSON cannot hold exactly is refused when the column is built
+    with pytest.raises(ValueError, match="strings, numbers or NULL"):
+        with_time_chunk(seqs.withColumn("day", F.to_date("seq_ts")), "day", "seq_ts", 4,
+                        bounds={datetime.date(2026, 1, 1): (0, 86_400_000_000)})
 
 
 def test_order_col_must_be_bigint_micros(spark, fixture_dir):

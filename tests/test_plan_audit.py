@@ -407,12 +407,11 @@ def test_narrow_chain_fused_rolling_and_shared_sort(spark):
         "__ous", F.unix_micros(F.col("ts"))
     )
     sess = sessionize(
-        base, "ent", "ts", 30.0, order_extra=["tie"], n_chunks=4,
-        bounds=bounds, chunk_col="__tchunk", order_col="__ous",
+        base, "ent", "ts", 30.0, order_extra=["tie"],
+        chunk_col="__tchunk", order_col="__ous",
     )
     roll = rolling_count(
-        sess, "ent", "ts", 60, "rn", n_chunks=4,
-        bounds=bounds, chunk_col="__tchunk", order_col="__ous",
+        sess, "ent", "ts", 60, "rn", chunk_col="__tchunk", order_col="__ous",
     )
     plan = plan_of(roll, "simple")
     # (1) every Window node computing __lcum also carries __llt and
@@ -439,8 +438,7 @@ def test_narrow_chain_fused_rolling_and_shared_sort(spark):
     try:
         ck = sess.localCheckpoint(eager=False)
         roll_ck = rolling_count(
-            ck, "ent", "ts", 60, "rn", n_chunks=4,
-            bounds=bounds, chunk_col="__tchunk", order_col="__ous",
+            ck, "ent", "ts", 60, "rn", chunk_col="__tchunk", order_col="__ous",
         )
         plan_ck = plan_of(roll_ck, "simple")
     finally:
